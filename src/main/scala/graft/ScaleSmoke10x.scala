@@ -202,7 +202,7 @@ object ScaleSmoke10x {
     val docs = spark.read.parquet(s"$dir/docs")
     val pairsDir = s"$dir/servedpairs"
     val nCand = timed(s"ServedPairs COLD build ($nDocs docs: stamp + " +
-        "shingle/df-cap/self-join candidate write + meta)") {
+        "shingle/df-cap/self-join candidate write + publish)") {
       graft.dedup.ServedPairs.candidatesOf(spark, pairsDir, docs).count()
     }
     println(s"[scale10x] served candidate universe: $nCand rows")
@@ -210,15 +210,15 @@ object ScaleSmoke10x {
     timed("ServedPairs serve (memoized fresh)") {
       graft.dedup.ServedPairs.candidatesOf(spark, pairsDir, docs).count()
     }
-    // a NEW session (memo cleared) pays one stamp pass + meta read
-    graft.dedup.ServedPairs.invalidateServed()
-    timed("ServedPairs staleness CHECK (stamp pass, meta fresh)") {
+    // a NEW session (memo cleared) pays one stamp pass + stamp read
+    Served.invalidate()
+    timed("ServedPairs staleness CHECK (stamp pass, stamp fresh)") {
       graft.dedup.ServedPairs.candidatesOf(spark, pairsDir, docs).count()
     }
     // corpus moved: full rebuild (the refresh-not-refuse contract) —
     // this is the rewrite amplification: candidate generation is not
     // incremental, a moved stamp rebuilds the whole universe
-    graft.dedup.ServedPairs.invalidateServed()
+    Served.invalidate()
     val docs2 = docs.unionByName(spark.range(1).select(
       lit(nDocs.toLong + 7L).as("doc_id"),
       lit("w1 w2 w3 w4 w5 w6 w7 w8 w9 w10").as("text")))

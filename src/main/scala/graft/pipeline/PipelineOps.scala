@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.{QueryModule, Tables}
+import graft.{QueryModule, Served, Tables}
 
 /** Corpus-curation operators a training-data pipeline runs besides
   * dedup: deterministic stratified sampling (data mixing) and
@@ -672,19 +672,16 @@ object PipelineOps extends QueryModule {
   }
 
   // --- served DSIR weights (the maintained-artifact form) -------------
-  /** DSIR weights as a MAINTAINED ARTIFACT — the `servedAssignments`
-    * treatment applied to the importance model: the weights are a
+  /** DSIR weights as a [[graft.Served]] artifact: the weights are a
     * property of (corpus, target predicate, bucket count), not of one
     * mix call, yet every `mix`/`corpus_dsir` invocation was re-paying
     * the token explode + two model aggregates for a result that never
-    * changes between corpus drifts. One deterministic dir per
-    * (dataset, predicate key, buckets, layout version) holds the
-    * (doc_id, n_tokens, dsir_x1e6) table; freshness = (doc count,
-    * token-count sum) against the live table, persisted under `meta/`
-    * (written LAST — its presence certifies a complete weights write)
-    * and checked once per JVM per dir. Byte-identical to
-    * [[dsirWeights]] (floor-quantized integer weights are
-    * deterministic), so hash-oracle rows serve from it unchanged.
+    * changes between corpus drifts. One directory per (dataset,
+    * predicate key, buckets, layout version) holds the (doc_id,
+    * n_tokens, dsir_x1e6) table, stamped over the documents table's
+    * (doc_id, text). Byte-identical to [[dsirWeights]]
+    * (floor-quantized integer weights are deterministic), so
+    * hash-oracle rows serve from it unchanged.
     *
     * `predKey` names the predicate in the cache key — the Column
     * itself has no stable identity, so the CALLER owns the contract
@@ -692,36 +689,15 @@ object PipelineOps extends QueryModule {
     * a view name). At 100 TB this turns the mix's dominant repeated
     * corpus pass into a parquet read of one slim row-per-doc table.
     */
-  private val servedDsirFresh =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Drop the per-JVM freshness memo — the content check re-runs at
-    * each dir's next read (see `TopicCluster.invalidateServed`).
-    */
-  private[graft] def invalidateServedDsir(): Unit = servedDsirFresh.clear()
-
   def servedDsirWeights(s: SparkSession, d: String, predKey: String,
                         targetPred: Column, buckets: Int = 1024): DataFrame = {
     val dir = graft.text.TextAnalysis.termIdxDir(d, s"-dsir-$predKey-b$buckets-v1")
-    def weights = s.read.parquet(s"$dir/weights")
-    if (servedDsirFresh.contains(dir)) return weights
-    val live = Tables.documents(s, d)
-    val liveRow = live.agg(count(lit(1)),
-      coalesce(sum(size(split(col("text"), " ")).cast(LongType)), lit(0L))).head()
-    val fresh = scala.util.Try {
-      val m = s.read.parquet(s"$dir/meta").head()
-      m.getLong(0) == liveRow.getLong(0) && m.getLong(1) == liveRow.getLong(1)
-    }.getOrElse(false)
-    if (!fresh) {
+    Served.ensure(s, dir, Tables.documents(s, d), "doc_id", "text") { live =>
       val (w, release) = dsirWeightsReleasable(live, targetPred, buckets)
       w.write.mode("overwrite").parquet(s"$dir/weights")
       release()
-      s.createDataFrame(Seq((liveRow.getLong(0), liveRow.getLong(1))))
-        .toDF("n_docs", "sum_dl").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/meta")
     }
-    servedDsirFresh.add(dir)
-    weights
+    s.read.parquet(s"$dir/weights")
   }
 
   private def dsirQuery(s: SparkSession, d: String): DataFrame =

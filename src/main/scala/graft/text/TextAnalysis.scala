@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.{QueryModule, Tables}
+import graft.{QueryModule, Served, Tables}
 import graft.expressions.CountMinAgg
 
 /** Text analysis for training-data curation (SURVEY §2 block E):
@@ -857,49 +857,26 @@ object TextAnalysis extends QueryModule {
           d.getBytes("UTF-8").length, 42) & 0xffffffffL) + suffix
 
   /** The SHARED maintained index the registered probe queries serve
-    * from — built once per (sf dir, layout), reused by every query
-    * and bench pass after: the maintained-index contract IS
-    * build-once-serve-many, so per-query rebuilds would overstate
-    * serving cost ~5x (ScaleSmoke records build cost separately).
-    * Freshness guards: meta/ is build()'s LAST write, so its absence
-    * means no/crashed build (rebuild); a doc-count mismatch against
-    * the live documents table means stale testdata (rebuild); the
-    * layout-version suffix retires cached dirs when the postings
-    * schema changes (bump it with any such change).
+    * from — a [[graft.Served]] artifact, built once per (sf dir,
+    * layout) and reused by every query and bench pass after: the
+    * maintained-index contract IS build-once-serve-many, so per-query
+    * rebuilds would overstate serving cost ~5x (ScaleSmoke records
+    * build cost separately). The layout-version suffix retires cached
+    * dirs when the postings schema changes (bump it with any such
+    * change).
     */
   private val idxLayoutVersion = 1
-  // dirs proven fresh THIS JVM: the content check (one token-count
-  // scan of documents) runs once per session per dir, not once per
-  // query call
-  private val servedIdxFresh =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private[graft] def servedIdx(s: SparkSession, d: String,
-                               positional: Boolean): TermIndex = {
-    val dir = termIdxDir(d,
-      (if (positional) "-pos-v" else "-flat-v") + idxLayoutVersion)
-    val idx = new TermIndex(s, dir, positional = positional)
-    if (servedIdxFresh.contains(dir)) return idx
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    // Try: a crashed build can leave a meta dir with no readable
-    // footers — treat any failure as not-fresh (build() clears and
-    // rewrites) instead of throwing on every later run. Content
-    // check: (n_docs, sum_dl) against the live table — doc count
-    // alone would miss regenerated same-count testdata, and the
-    // token-count sum moves with any text change.
-    val fresh = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta")) &&
-      scala.util.Try {
-        val m = s.read.parquet(s"$dir/meta")
-          .agg(coalesce(sum("n_docs"), lit(0L)),
-            coalesce(sum("sum_dl"), lit(0L))).head()
-        val live = Tables.documents(s, d)
-          .agg(count(lit(1)),
-            coalesce(sum(size(split(col("text"), " ")).cast(LongType)), lit(0L)))
-          .head()
-        m.getLong(0) == live.getLong(0) && m.getLong(1) == live.getLong(1)
-      }.getOrElse(false)
-    if (!fresh) idx.build(Tables.documents(s, d).select("doc_id", "text"))
-    servedIdxFresh.add(dir)
+                               positional: Boolean): TermIndex =
+    servedTermIdx(s, d, if (positional) "-pos-v" else "-flat-v", positional, None)
+
+  private def servedTermIdx(s: SparkSession, d: String, tag: String,
+                            positional: Boolean,
+                            analyzer: Option[TermIndex.Analyzer]): TermIndex = {
+    val dir = termIdxDir(d, tag + idxLayoutVersion)
+    val idx = new TermIndex(s, dir, positional = positional, analyzer = analyzer)
+    Served.ensure(s, dir, Tables.documents(s, d), "doc_id", "text")(docs =>
+      idx.build(docs.select("doc_id", "text")))
     idx
   }
 
@@ -921,33 +898,9 @@ object TextAnalysis extends QueryModule {
     lowercase = true, stopwords = graft.text.TermIndex.EnglishStopwords)
 
   private[graft] def servedAnalyzedIdx(s: SparkSession, d: String,
-                                       positional: Boolean = false): TermIndex = {
-    val dir = termIdxDir(d,
-      (if (positional) "-anlpos-v" else "-anl-v") + idxLayoutVersion)
-    val idx = new TermIndex(s, dir, positional = positional,
-      analyzer = Some(bm25Analyzer))
-    if (servedIdxFresh.contains(dir)) return idx
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    // same freshness discipline as [[servedIdx]], with the ANALYZED
-    // token count as the content probe (the analyzed index's meta
-    // sum_dl counts kept tokens, so the live side must too — via the
-    // Analyzer's ONE shared expression, so it cannot drift)
-    val liveToks = bm25Analyzer.tokensCol(split(col("text"), " "))
-    val fresh = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/meta")) &&
-      scala.util.Try {
-        val m = s.read.parquet(s"$dir/meta")
-          .agg(coalesce(sum("n_docs"), lit(0L)),
-            coalesce(sum("sum_dl"), lit(0L))).head()
-        val live = Tables.documents(s, d)
-          .agg(count(lit(1)),
-            coalesce(sum(size(liveToks).cast(LongType)), lit(0L))).head()
-        m.getLong(0) == live.getLong(0) && m.getLong(1) == live.getLong(1)
-      }.getOrElse(false)
-    if (!fresh) idx.build(Tables.documents(s, d).select("doc_id", "text"))
-    servedIdxFresh.add(dir)
-    idx
-  }
+                                       positional: Boolean = false): TermIndex =
+    servedTermIdx(s, d, if (positional) "-anlpos-v" else "-anl-v", positional,
+      Some(bm25Analyzer))
 
   private def bm25Analyzed(s: SparkSession, d: String): DataFrame =
     servedAnalyzedIdx(s, d).search(bm25AnalyzedProbe, k = 10,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.{QueryModule, Tables}
+import graft.{QueryModule, Served, Tables}
 import graft.embed.HashEmbedder
 import graft.vector.Centroids
 
@@ -82,102 +82,58 @@ object TopicCluster extends QueryModule {
       .select(col(idCol), col("cluster"), col("cluster_size"))
   }
 
-  /** The SERVED assignment — build-once-serve-many, the `servedIdx`
-    * treatment applied to the topic model: the registered
+  /** The SERVED assignment ([[graft.Served]]): the registered
     * `text_cluster` and `corpus_mix` queries were re-running
     * hash-embed + Lloyd per call, overstating served clustering cost
     * the same way per-query index rebuilds overstated text serving
     * (a mixing pipeline clusters once, then samples/packs/dashboards
     * against the SAME assignment many times — re-clustering between
     * reads would even break mix reproducibility if the corpus
-    * drifted). One deterministic dir per (dataset, k, iters, source,
-    * layout version); freshness = a cheap content stamp against the
-    * live table, persisted under `meta/` and checked once per JVM per
-    * dir — stale or crashed caches rebuild. Output is byte-identical
-    * to [[clusterDocs]] (everything deterministic), so the rows-only
-    * spec contract is unchanged.
-    */
-  private val servedFresh =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Drop the per-JVM freshness memo — the content check re-runs at
-    * each dir's next read. The memo assumes the session's datasets
-    * don't mutate mid-JVM (servedIdx's contract); a caller that DOES
-    * regenerate a dataset in-session invalidates first.
-    */
-  private[graft] def invalidateServed(): Unit = servedFresh.clear()
-
-  /** Everything one served model lifecycle needs: the artifact dir,
-    * the live frame, its id column, the embed step (live rows →
-    * (idCol, embedding ARRAY<DOUBLE>)), and the freshness stamp.
-    * Text and vector flavors differ ONLY here.
-    */
-  /** `stamp` is a THUNK (r16): the content stamp is a full table
-    * aggregation, and computing it eagerly at source construction made
-    * every memo-HIT call pay the stamp job anyway — the memo exists to
-    * skip exactly that. servedFor evaluates it only on a memo miss
-    * (at most once per JVM per fresh dir).
+    * drifted). One directory per (dataset, k, iters, source, layout
+    * version). Output is byte-identical to [[clusterDocs]] (everything
+    * deterministic), so the rows-only spec contract is unchanged.
+    *
+    * A source is everything one model lifecycle needs: the artifact
+    * dir, the live frame, its id and stamped payload columns, and the
+    * embed step (live rows → (idCol, embedding ARRAY<DOUBLE>)). Text
+    * and vector flavors differ ONLY here.
     */
   private case class ModelSource(dir: String, live: DataFrame, idCol: String,
-                                 embed: DataFrame => DataFrame,
-                                 stamp: () => (Long, Long))
+                                 payloadCol: String, embed: DataFrame => DataFrame)
 
-  private def docSource(s: SparkSession, d: String, k: Int, iters: Int): ModelSource = {
-    val live = Tables.documents(s, d)
-    // content stamp: row count + (token sum + order-independent sum of
-    // per-row 32-bit text hashes) — the hash term catches an in-place
-    // edit that preserves both row count and token count, matching
-    // vecSource's hash-based stamp (asymmetry flagged in round 12).
-    // hash() is 32-bit so the long sum can't ANSI-overflow below 2^32
-    // rows (xxhash64 would).
+  private def docSource(s: SparkSession, d: String, k: Int, iters: Int): ModelSource =
     ModelSource(TextAnalysis.termIdxDir(d, s"-cluster-k$k-i$iters-v3"),
-      live, "doc_id", docs => HashEmbedder.embed(docs),
-      () => {
-        val r = live.agg(count(lit(1)),
-          coalesce(sum(size(split(col("text"), " ")).cast(LongType)), lit(0L)) +
-            coalesce(sum(hash(col("text")).cast(LongType)), lit(0L))).head()
-        (r.getLong(0), r.getLong(1))
-      })
-  }
+      Tables.documents(s, d), "doc_id", "text", docs => HashEmbedder.embed(docs))
 
-  private def vecSource(s: SparkSession, d: String, k: Int, iters: Int): ModelSource = {
-    val live = Tables.embeddings(s, d)
-    // content stamp: row count + an order-independent sum of per-row
-    // vector hashes — catches append/delete AND in-place mutation
-    // (the text stamp's token-sum analogue for a column with no
-    // token count)
+  private def vecSource(s: SparkSession, d: String, k: Int, iters: Int): ModelSource =
     ModelSource(TextAnalysis.termIdxDir(d, s"-veccluster-k$k-i$iters-v1"),
-      live, "vec_id",
+      Tables.embeddings(s, d), "vec_id", "embedding",
       vs => vs.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("embedding")),
-      () => {
-        val r = live.agg(count(lit(1)),
-          coalesce(sum(hash(col("embedding")).cast(LongType)), lit(0L))).head()
-        (r.getLong(0), r.getLong(1))
-      })
-  }
+        col("embedding").cast("array<double>").as("embedding")))
 
-  /** Full train-and-persist: slim assignment, k-row sizes, the
-    * centroid MODEL (what `maintain` assigns against), then meta LAST
-    * (its presence certifies a complete write).
+  /** Full train-and-persist: slim assignment, k-row sizes and the
+    * centroid MODEL (what `maintain` assigns against).
     */
   private def persistModel(s: SparkSession, src: ModelSource,
                            k: Int, iters: Int): Unit = {
-    import s.implicits._
     val (cents, a) = clusterEmb(src.embed(src.live), src.idCol, k, iters)
     a.write.mode("overwrite").parquet(s"${src.dir}/assign")
     writeSizes(s, src.dir)
-    cents.toSeq.map { case (c, v) => (c.toLong, v.toSeq) }
-      .toDF("cluster", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"${src.dir}/model")
-    s.createDataFrame(Seq(src.stamp())).toDF("n_docs", "sum_dl").coalesce(1)
-      .write.mode("overwrite").parquet(s"${src.dir}/meta")
+    writeModel(s, src.dir, cents)
   }
 
   private def writeSizes(s: SparkSession, dir: String): Unit =
     s.read.parquet(s"$dir/assign").groupBy("cluster")
       .agg(count(lit(1)).as("cluster_size")).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/sizes")
+
+  private def writeModel(s: SparkSession, dir: String,
+                         cents: Array[(Int, Array[Double])]): Unit = {
+    import s.implicits._
+    cents.toSeq.map { case (c, v) => (c.toLong, v.toSeq) }
+      .toDF("cluster", "centroid").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/model")
+  }
 
   private def readModel(s: SparkSession, dir: String): Array[(Int, Array[Double])] =
     s.read.parquet(s"$dir/model").collect()
@@ -186,19 +142,11 @@ object TopicCluster extends QueryModule {
 
   private def servedFor(s: SparkSession, src: ModelSource,
                         k: Int, iters: Int): DataFrame = {
-    def assigned = s.read.parquet(s"${src.dir}/assign")
+    Served.ensure(s, src.dir, src.live, src.idCol, src.payloadCol)(_ =>
+      persistModel(s, src, k, iters))
+    s.read.parquet(s"${src.dir}/assign")
       .join(broadcast(s.read.parquet(s"${src.dir}/sizes")), "cluster")
       .select(col(src.idCol), col("cluster"), col("cluster_size"))
-    if (servedFresh.contains(src.dir)) return assigned
-    // memo miss: pay the stamp aggregation at most once per JVM per dir
-    val st = src.stamp()
-    val fresh = scala.util.Try {
-      val m = s.read.parquet(s"${src.dir}/meta").head()
-      m.getLong(0) == st._1 && m.getLong(1) == st._2
-    }.getOrElse(false)
-    if (!fresh) persistModel(s, src, k, iters)
-    servedFresh.add(src.dir)
-    assigned
   }
 
   private[graft] def servedAssignments(s: SparkSession, d: String,
@@ -232,7 +180,7 @@ object TopicCluster extends QueryModule {
     *    artifact, arrivals are scored against it, and re-training is
     *    an explicit decision, not a side effect of serving. Deletions
     *    are NOT handled incrementally (the assignment would go stale
-    *    silently under a frozen meta) — a shrunken corpus fails
+    *    silently under a frozen stamp) — a shrunken corpus fails
     *    loudly here and wants `retrain = true`.
     *  - `retrain = true`: warm-start Lloyd from the PERSISTED
     *    centroids ([[graft.vector.Centroids.lloydFrom]] — few
@@ -241,8 +189,9 @@ object TopicCluster extends QueryModule {
     *    verb when append volume has moved the topic mass enough that
     *    frozen routing misleads quotas.
     *
-    * Both end by re-stamping sizes + meta, so `servedAssignments`
-    * serves the maintained artifact without a rebuild. Requires a
+    * Both end by re-publishing sizes under the live table's stamp, so
+    * `servedAssignments` serves the maintained artifact without a
+    * rebuild. Requires a
     * served model to exist (serve once first).
     */
   def maintainAssignments(s: SparkSession, d: String, k: Int = 8,
@@ -262,28 +211,24 @@ object TopicCluster extends QueryModule {
 
   private def maintainFor(s: SparkSession, src: ModelSource,
                           retrain: Boolean, retrainIters: Int): ModelMaintenance = {
-    import s.implicits._
     val dir = src.dir
-    require(scala.util.Try(s.read.parquet(s"$dir/meta").head()).isSuccess,
+    require(Served.read(s, dir).isDefined,
       s"no served topic model at $dir — serve (or rebuild) before maintaining")
     val cached = s.read.parquet(s"$dir/assign").select(src.idCol)
-    val st = src.stamp()
+    val st = Served.stamp(src.live, src.idCol, src.payloadCol)
     if (retrain) {
       // count BEFORE the overwrite below: `cached`'s resolved file
       // listing points at the pre-retrain part files
       val nOld = cached.count()
-      val (cents, a) = Centroids.lloydFrom(src.embed(src.live),
-        idCol = src.idCol, vecCol = "embedding",
-        init = readModel(s, dir), iters = retrainIters)
-      a.select(col(src.idCol), col("shard").cast(LongType).as("cluster"))
-        .write.mode("overwrite").parquet(s"$dir/assign")
-      writeSizes(s, dir)
-      cents.toSeq.map { case (c, v) => (c.toLong, v.toSeq) }
-        .toDF("cluster", "centroid").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/model")
-      s.createDataFrame(Seq(st)).toDF("n_docs", "sum_dl").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/meta")
-      servedFresh.add(dir)
+      Served.publish(s, dir, st) {
+        val (cents, a) = Centroids.lloydFrom(src.embed(src.live),
+          idCol = src.idCol, vecCol = "embedding",
+          init = readModel(s, dir), iters = retrainIters)
+        a.select(col(src.idCol), col("shard").cast(LongType).as("cluster"))
+          .write.mode("overwrite").parquet(s"$dir/assign")
+        writeSizes(s, dir)
+        writeModel(s, dir, cents)
+      }
       ModelMaintenance(nNew = st._1 - nOld, nDocs = st._1,
         retrained = true)
     } else {
@@ -293,13 +238,12 @@ object TopicCluster extends QueryModule {
           "append-only; deletions need retrain = true (or a rebuild)")
       val newDocs = src.live.join(cached, Seq(src.idCol), "left_anti")
       val nNew = newDocs.count()
-      if (nNew > 0)
-        assignFrozenEmb(src.embed(newDocs), src.idCol, readModel(s, dir))
-          .write.mode("append").parquet(s"$dir/assign")
-      writeSizes(s, dir)
-      s.createDataFrame(Seq(st)).toDF("n_docs", "sum_dl").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/meta")
-      servedFresh.add(dir)
+      Served.publish(s, dir, st) {
+        if (nNew > 0)
+          assignFrozenEmb(src.embed(newDocs), src.idCol, readModel(s, dir))
+            .write.mode("append").parquet(s"$dir/assign")
+        writeSizes(s, dir)
+      }
       ModelMaintenance(nNew = nNew, nDocs = st._1, retrained = false)
     }
   }

@@ -4,55 +4,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.Tables
+import graft.{Served, Tables}
 
-/** Served PQ/OPQ artifacts: train-once / serve-many for the
-  * compressed-knn queries, the `servedIdx`/`servedAssignments`
-  * treatment applied to codebooks (round-12 VERDICT ask 3).
+/** Served PQ/OPQ artifacts ([[graft.Served]]): train-once /
+  * serve-many for the compressed-knn queries.
   *
   * Per-call Lloyd training inside `vdb_knn_pq`/`vdb_knn_opq` was the
   * slowest vector pair on the bench (1.53 s / 2.76 s at sf0.1), and
   * at 100× data a per-call train is a BUILD per query. The artifact
   * splits them: `book/` holds the codebook rows (subspace, code,
   * centroid) — plus `rot/` for OPQ's rotation (mean + permuted
-  * components), `codes/` holds the ENCODED corpus (id, pq_codes) so
-  * serving also skips the encode projection, and `meta/` (written
-  * LAST — its presence certifies a complete write) carries the
-  * freshness stamp. Stamp = (row count, order-independent sum of
-  * per-row 32-bit vector hashes) — [[graft.text.TopicCluster]]'s
-  * vecSource convention: catches append/delete AND in-place mutation;
-  * a stale stamp retrains and rewrites (refresh, not refuse — the
-  * assignment-model contract).
+  * components), and `codes/` holds the ENCODED corpus (vec_id,
+  * pq_codes) so serving also skips the encode projection. The stamp
+  * is over (vec_id, embedding).
   *
   * Determinism/oracle story: training is deterministic (seeded
   * sample, lowest-id init), so the served model IS the model the
   * per-call query trained — served results are bit-identical and the
-  * exact-L2 re-rank keeps the DuckDB oracle green either way. The
-  * per-JVM memo assumes immutable-in-session datasets (servedIdx's
-  * contract); in-session regeneration calls [[invalidateServed]].
+  * exact-L2 re-rank keeps the DuckDB oracle green either way.
   */
 object ServedQuant {
-
-  private val servedFresh =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private[graft] def invalidateServed(): Unit = servedFresh.clear()
-
-  private def stamp(live: DataFrame): (Long, Long) = {
-    val r = live.agg(count(lit(1)),
-      coalesce(sum(hash(col("embedding")).cast(LongType)), lit(0L))).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
-  private def metaFresh(s: SparkSession, dir: String, st: (Long, Long)): Boolean =
-    scala.util.Try {
-      val m = s.read.parquet(s"$dir/meta").head()
-      m.getLong(0) == st._1 && m.getLong(1) == st._2
-    }.getOrElse(false)
-
-  private def writeMeta(s: SparkSession, dir: String, st: (Long, Long)): Unit =
-    s.createDataFrame(Seq(st)).toDF("n_vecs", "sum_hash").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/meta")
 
   // --- codebook (de)serialization ------------------------------------
 
@@ -97,27 +68,22 @@ object ServedQuant {
   private def pqDir(d: String, m: Int): String =
     graft.text.TextAnalysis.termIdxDir(d, s"-pq-m$m-v1")
 
+  private def writeCodes(s: SparkSession, dir: String, encoded: DataFrame): Unit =
+    encoded.select(col("vec_id").cast(LongType).as("vec_id"), col("pq_codes"))
+      .write.mode("overwrite").parquet(s"$dir/codes")
+
   /** The served PQ model + encoded-corpus frame for `d`'s embeddings
     * table. Trains (deterministic 20% sample, `knnPq`'s recipe) and
-    * persists only when the artifact is missing or the corpus stamp
-    * moved; otherwise one meta read per JVM per dir.
+    * persists only when the artifact is missing or stale.
     */
   def servedPq(s: SparkSession, d: String, numSubspaces: Int = 16)
       : (ProductQuantizer.Model, DataFrame) = {
     val dir = pqDir(d, numSubspaces)
-    val live = Tables.embeddings(s, d)
-    if (!servedFresh.contains(dir)) {
-      val st = stamp(live)
-      if (!metaFresh(s, dir, st)) {
-        val model = ProductQuantizer.train(live.sample(0.2, 42L),
-          numSubspaces = numSubspaces)
-        ProductQuantizer.encode(live, model)
-          .select(col("vec_id").cast(LongType).as("vec_id"), col("pq_codes"))
-          .write.mode("overwrite").parquet(s"$dir/codes")
-        writeBook(s, dir, model)
-        writeMeta(s, dir, st)
-      }
-      servedFresh.add(dir)
+    Served.ensure(s, dir, Tables.embeddings(s, d), "vec_id", "embedding") { live =>
+      val model = ProductQuantizer.train(live.sample(0.2, 42L),
+        numSubspaces = numSubspaces)
+      writeCodes(s, dir, ProductQuantizer.encode(live, model))
+      writeBook(s, dir, model)
     }
     (readBook(s, dir), s.read.parquet(s"$dir/codes"))
   }
@@ -134,21 +100,13 @@ object ServedQuant {
                 numSubspaces: Int = 16, numCodes: Int = 16, iters: Int = 3)
       : (Opq.Model, DataFrame) = {
     val dir = opqDir(d, numSubspaces)
-    val live = Tables.embeddings(s, d)
-    if (!servedFresh.contains(dir)) {
-      val st = stamp(live)
-      if (!metaFresh(s, dir, st)) {
-        val model = Opq.train(live.sample(0.2, 42L), "vec_id", "embedding",
-          dim = dim, numSubspaces = numSubspaces, numCodes = numCodes,
-          iters = iters)
-        Opq.encode(live, model)
-          .select(col("vec_id").cast(LongType).as("vec_id"), col("pq_codes"))
-          .write.mode("overwrite").parquet(s"$dir/codes")
-        writeBook(s, dir, model.pq)
-        writeRot(s, dir, model.rotation)
-        writeMeta(s, dir, st)
-      }
-      servedFresh.add(dir)
+    Served.ensure(s, dir, Tables.embeddings(s, d), "vec_id", "embedding") { live =>
+      val model = Opq.train(live.sample(0.2, 42L), "vec_id", "embedding",
+        dim = dim, numSubspaces = numSubspaces, numCodes = numCodes,
+        iters = iters)
+      writeCodes(s, dir, Opq.encode(live, model))
+      writeBook(s, dir, model.pq)
+      writeRot(s, dir, model.rotation)
     }
     (Opq.Model(readRot(s, dir), readBook(s, dir)),
       s.read.parquet(s"$dir/codes"))

@@ -85,7 +85,7 @@ class MaxsimSpec extends AnyFunSuite {
     mk(query).write.parquet(dataDir)
     def docs = spark.read.parquet(dataDir)
     def serveOnce() = {
-      graft.vector.ServedMaxsim.invalidateServed()
+      Served.invalidate()
       graft.vector.Serving.maxsimFrom(
           graft.vector.ServedMaxsim.servedChunksOf(spark, artDir, docs),
           docs, Seq(0L), topK = 10)

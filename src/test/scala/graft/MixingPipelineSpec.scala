@@ -152,12 +152,12 @@ class MixingPipelineSpec extends AnyFunSuite {
     val pred = col("doc_id") < 20
     val direct = rows(PipelineOps.dsirWeights(docs, pred),
       "doc_id", "n_tokens", "dsir_x1e6")
-    PipelineOps.invalidateServedDsir()
+    Served.invalidate()
     val served1 = PipelineOps.servedDsirWeights(spark, sf, "doclt20", pred)
     assert(rows(served1, "doc_id", "n_tokens", "dsir_x1e6") === direct,
       "the maintained artifact must be byte-identical to dsirWeights")
     // second read: the per-JVM memo path (no rebuild) serves the same
-    PipelineOps.invalidateServedDsir()
+    Served.invalidate()
     val served2 = PipelineOps.servedDsirWeights(spark, sf, "doclt20", pred)
     assert(rows(served2, "doc_id", "n_tokens", "dsir_x1e6") === direct,
       "a content-fresh artifact must serve unchanged after memo invalidation")
@@ -166,17 +166,18 @@ class MixingPipelineSpec extends AnyFunSuite {
   test("a drifted corpus rebuilds the served DSIR artifact") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-dsir-drift").toString
-    def write(n: Int): Unit = (0 until n)
-      .map(i => (i.toLong, s"tok${i % 7} tok${i % 11} body$i", "en", "web"))
+    def write(n: Int, shift: Int = 0): Unit = (0 until n)
+      .map { i => val j = i + shift
+        (i.toLong, s"tok${j % 7} tok${j % 11} body$j", "en", "web") }
       .toDF("doc_id", "text", "lang", "source")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     write(40)
     val pred = col("doc_id") < 10
-    PipelineOps.invalidateServedDsir()
+    Served.invalidate()
     val before = rows(PipelineOps.servedDsirWeights(spark, dir, "p10", pred),
       "doc_id", "dsir_x1e6")
     write(60) // drift: more docs → different models, stale artifact
-    PipelineOps.invalidateServedDsir() // in-session regeneration contract
+    Served.invalidate() // in-session regeneration contract
     val after = PipelineOps.servedDsirWeights(spark, dir, "p10", pred)
     assert(after.count() === 60L, "the rebuilt artifact must cover the drifted corpus")
     assert(rows(after, "doc_id", "dsir_x1e6") !==  before)
@@ -185,6 +186,16 @@ class MixingPipelineSpec extends AnyFunSuite {
         spark.read.parquet(s"$dir/documents.parquet"), pred),
         "doc_id", "dsir_x1e6"),
       "post-drift serving must equal a fresh direct computation")
+    // an edit that keeps the doc count AND the token count: every doc
+    // takes its successor's text, so the target slice's model moves
+    write(60, shift = 1)
+    Served.invalidate()
+    assert(rows(PipelineOps.servedDsirWeights(spark, dir, "p10", pred),
+        "doc_id", "dsir_x1e6") ===
+      rows(PipelineOps.dsirWeights(
+        spark.read.parquet(s"$dir/documents.parquet"), pred),
+        "doc_id", "dsir_x1e6"),
+      "a token-count-preserving edit must rebuild the served weights")
   }
 
   test("mix with supplied served weights equals the self-computing mix") {
@@ -192,7 +203,7 @@ class MixingPipelineSpec extends AnyFunSuite {
     val pred = col("doc_id") < 20
     val self = MixingPipeline.mix(spark, docs, k = 4, targetDocs = 40,
       targetPred = pred)
-    PipelineOps.invalidateServedDsir()
+    Served.invalidate()
     val handed = MixingPipeline.mix(spark, docs, k = 4, targetDocs = 40,
       targetPred = pred,
       weights = Some(PipelineOps.servedDsirWeights(spark, sf, "doclt20", pred)))

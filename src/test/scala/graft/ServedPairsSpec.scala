@@ -59,7 +59,7 @@ class ServedPairsSpec extends AnyFunSuite {
     val t0 = newestMtime()
     // same corpus after a memo invalidation: the meta stamp matches,
     // so the artifact is REUSED, not rewritten
-    ServedPairs.invalidateServed()
+    Served.invalidate()
     Thread.sleep(20)
     assert(rows(Dedup.jaccardOf(
       ServedPairs.candidatesOf(spark, dir, docs), 0.5)) === first)
@@ -70,11 +70,11 @@ class ServedPairsSpec extends AnyFunSuite {
     val edited = docs.withColumn("text",
       when(col("doc_id") === 2L, lit("altogether different content now here"))
         .otherwise(col("text")))
-    ServedPairs.invalidateServed()
+    Served.invalidate()
     val after = rows(Dedup.jaccardOf(
       ServedPairs.candidatesOf(spark, dir, edited), 0.5))
     assert(after.isEmpty, "the edit must break the planted pair")
     assert(after === rows(Dedup.ngramJaccardPairs(edited, threshold = 0.5)))
-    ServedPairs.invalidateServed()
+    Served.invalidate()
   }
 }

@@ -744,4 +744,26 @@ class TermIndexSpec extends AnyFunSuite {
       Seq((0L, Seq("hash"))).toDF("query_id", "phrase")))
     assert(ex.getMessage.contains(">= 2 terms"))
   }
+
+  test("served indexes rebuild on an edit that keeps every count") {
+    import spark.implicits._
+    val dataDir = Files.createTempDirectory("graft-tidx-served").toString
+    def write(texts: Seq[String]): Unit =
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dataDir/documents.parquet")
+    def hits(): (Set[Long], Set[Long]) = {
+      def ids(idx: TermIndex) = topMap(idx.search(Seq("alpha"), k = 10)).map(_._1).toSet
+      (ids(graft.text.TextAnalysis.servedIdx(spark, dataDir, positional = false)),
+        ids(graft.text.TextAnalysis.servedAnalyzedIdx(spark, dataDir)))
+    }
+    write(Seq("alpha beta", "gamma delta", "zeta alpha eta"))
+    Served.invalidate()
+    assert(hits() === ((Set(0L, 2L), Set(0L, 2L))))
+    // docs 0 and 1 swap texts: row count, token count and analyzed
+    // token count all hold, so only the (doc_id, text) hash sees it
+    write(Seq("gamma delta", "alpha beta", "zeta alpha eta"))
+    Served.invalidate()
+    assert(hits() === ((Set(1L, 2L), Set(1L, 2L))),
+      "a count-preserving edit must rebuild both served indexes")
+  }
 }

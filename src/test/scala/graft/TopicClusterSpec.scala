@@ -69,7 +69,7 @@ class TopicClusterSpec extends AnyFunSuite {
     // in-session regeneration invalidates first (the documented
     // contract — a fresh JVM re-checks unprompted).
     writeDocs(" drifted tokens here")
-    TopicCluster.invalidateServed()
+    Served.invalidate()
     val drifted = canon(TopicCluster.servedAssignments(spark, dataDir, k = 4))
     assert(drifted === canon(TopicCluster.clusterDocs(
         Tables.documents(spark, dataDir), k = 4)),
@@ -92,21 +92,35 @@ class TopicClusterSpec extends AnyFunSuite {
     writeDocs(v1)
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-    TopicCluster.invalidateServed()
+    Served.invalidate()
     canon(TopicCluster.servedAssignments(spark, dataDir, k = 4))
-    val metaDir =
-      graft.text.TextAnalysis.termIdxDir(dataDir, "-cluster-k4-i5-v3") + "/meta"
-    val stampBefore = spark.read.parquet(metaDir).head().getLong(1)
+    val dir = graft.text.TextAnalysis.termIdxDir(dataDir, "-cluster-k4-i5-v3")
+    val stampBefore = Served.read(spark, dir).get._2
     writeDocs(v2)
-    TopicCluster.invalidateServed()
+    Served.invalidate()
     val edited = canon(TopicCluster.servedAssignments(spark, dataDir, k = 4))
     assert(edited === canon(TopicCluster.clusterDocs(
         Tables.documents(spark, dataDir), k = 4)),
       "a count- and token-preserving edit must re-cluster, not serve stale")
-    // proof the rebuild actually FIRED: the re-stamped meta moved, which
+    // proof the rebuild actually FIRED: the re-stamped hash moved, which
     // only the hash term can see (row count and token sum are unchanged)
-    assert(spark.read.parquet(metaDir).head().getLong(1) !== stampBefore,
+    assert(Served.read(spark, dir).get._2 !== stampBefore,
       "the content-hash stamp must move on an in-place edit")
+
+    // swapping texts between two doc_ids in different clusters keeps
+    // every count and the multiset of texts: only a stamp that hashes
+    // the id with its text sees it
+    val byId = edited.map(t => t._1 -> t._2).toMap
+    val b = (1L until 40L).find(i => byId(i) != byId(0L)).get
+    val texts = Tables.documents(spark, dataDir).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    (0L until 40L).map(i => (i, texts(if (i == 0L) b else if (i == b) 0L else i)))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dataDir/documents.parquet")
+    Served.invalidate()
+    assert(canon(TopicCluster.servedAssignments(spark, dataDir, k = 4)) ===
+      canon(TopicCluster.clusterDocs(Tables.documents(spark, dataDir), k = 4)),
+      "a doc_id text swap must re-cluster, not serve stale")
   }
 
   test("maintain assigns appended docs to the frozen model without moving old rows") {
@@ -117,10 +131,10 @@ class TopicClusterSpec extends AnyFunSuite {
     gen(40).write.mode("overwrite").parquet(s"$dataDir/documents.parquet")
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-    TopicCluster.invalidateServed()
+    Served.invalidate()
     val before = canon(TopicCluster.servedAssignments(spark, dataDir, k = 4))
     gen(60).write.mode("overwrite").parquet(s"$dataDir/documents.parquet")
-    TopicCluster.invalidateServed()
+    Served.invalidate()
     val m = TopicCluster.maintainAssignments(spark, dataDir, k = 4)
     assert(m.nNew === 20L && m.nDocs === 60L && !m.retrained)
     val after = canon(TopicCluster.servedAssignments(spark, dataDir, k = 4))
@@ -135,7 +149,7 @@ class TopicClusterSpec extends AnyFunSuite {
     after.foreach { case (_, c, cs) => assert(cs === sizes(c)) }
     // a fresh-JVM-style re-check (memo dropped) serves without rebuild:
     // meta was re-stamped, so the served rows are the maintained ones
-    TopicCluster.invalidateServed()
+    Served.invalidate()
     assert(canon(TopicCluster.servedAssignments(spark, dataDir, k = 4)) === after,
       "maintain must leave the artifact content-fresh for serving")
     // maintain with nothing new is a cheap no-op ledger
@@ -149,10 +163,10 @@ class TopicClusterSpec extends AnyFunSuite {
     def gen(ids: Seq[Long]) = ids.map(i => (i, s"w${i % 7} x${i % 5} y${i % 3}"))
       .toDF("doc_id", "text")
     gen(0L until 40L).write.mode("overwrite").parquet(s"$dataDir/documents.parquet")
-    TopicCluster.invalidateServed()
+    Served.invalidate()
     TopicCluster.servedAssignments(spark, dataDir, k = 4).count()
     gen(10L until 40L).write.mode("overwrite").parquet(s"$dataDir/documents.parquet")
-    TopicCluster.invalidateServed()
+    Served.invalidate()
     val e = intercept[IllegalArgumentException] {
       TopicCluster.maintainAssignments(spark, dataDir, k = 4)
     }
@@ -195,7 +209,7 @@ class TopicClusterSpec extends AnyFunSuite {
     assert(direct(0L) !== direct(99L), "blobs merged")
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-    TopicCluster.invalidateServed()
+    Served.invalidate()
     val served = canon(TopicCluster.servedVectorAssignments(spark, dataDir, k = 2))
     assert(served.map(t => t._1 -> t._2).toMap === direct,
       "served vector assignment must equal the direct Lloyd run")
@@ -203,7 +217,7 @@ class TopicClusterSpec extends AnyFunSuite {
     // cluster map-only; old pairs byte-stable
     gen(0L until 120L).filter(col("vec_id") < 100 || col("vec_id") >= 100)
       .write.mode("overwrite").parquet(s"$dataDir/embeddings.parquet")
-    TopicCluster.invalidateServed()
+    Served.invalidate()
     val m = TopicCluster.maintainVectorAssignments(spark, dataDir, k = 2)
     assert(m.nNew === 20L && m.nDocs === 120L && !m.retrained)
     val after = canon(TopicCluster.servedVectorAssignments(spark, dataDir, k = 2))
@@ -216,7 +230,7 @@ class TopicClusterSpec extends AnyFunSuite {
       assert(c === direct(99L), s"new blob-B vec $id routed to cluster $c") }
     // deletion refuses; retrain covers the shrunken set
     gen(0L until 80L).write.mode("overwrite").parquet(s"$dataDir/embeddings.parquet")
-    TopicCluster.invalidateServed()
+    Served.invalidate()
     val e = intercept[IllegalArgumentException] {
       TopicCluster.maintainVectorAssignments(spark, dataDir, k = 2)
     }

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.pipeline.CurationPipeline
+import graft.sources.BatchedTable
 
 /** Streaming curation end-to-end: the ingest half of
   * [[CurationPipeline]] running continuously over a document stream,
@@ -30,10 +31,9 @@ import graft.pipeline.CurationPipeline
   *    job — the same split the batch pipeline's Scaladoc prescribes
   *    for its own exact-before-banded ordering.
   *
-  * Delivery contract: foreachBatch + parquet append is at-least-once
-  * (a batch retried after a sink-side failure appends twice); the
-  * closing [[finish]] pass re-runs exact dedup over the accumulated
-  * output, so replayed duplicates cannot reach the final corpus.
+  * Delivery contract: [[ServeStream]]'s. Each micro-batch's survivors
+  * overwrite their own `<outDir>/batch=b<batchId>` partition (the
+  * label the index appends use), so a replayed batch is written once.
   */
 object StreamingCuration {
 
@@ -120,10 +120,10 @@ object StreamingCuration {
         // its corpus is one micro-batch, so its exact/near-dup passes
         // are batch-local by construction. Drop accounting per batch
         // is available from the Result if a caller wants to meter it;
-        // the survivors append and the final accounting comes from
+        // the survivors are written and the final accounting comes from
         // finish() over the accumulated corpus.
         // watermark-advance ticks deliver empty batches; curating them
-        // would run the full pipeline plan to append nothing
+        // would run the full pipeline plan to write nothing
         if (!batch.isEmpty) {
           import org.apache.spark.sql.functions.col
           val b0 = batch.drop(tsCol)
@@ -164,12 +164,10 @@ object StreamingCuration {
             val r = CurationPipeline.curate(batch.sparkSession, incoming,
               minWords, jaccardThreshold)
             try {
-              r.kept.write.mode(SaveMode.Append).parquet(outDir)
-              // index maintenance AFTER the sink write, keyed by the
-              // micro-batch id: a retried batch re-runs both — the
-              // sink append is at-least-once (finish() dedups), the
-              // index write OVERWRITES its own batch=b<id> directory,
-              // so index state converges to exactly-once
+              // index maintenance AFTER the sink write; a retried batch
+              // re-runs both, and both overwrite their own batch=b<id>
+              // directory, so sink and index converge to exactly-once
+              BatchedTable.writeBatch(r.kept, outDir, s"b$batchId")
               corpusIndex.foreach(_.append(r.kept.select("doc_id", "text"), s"b$batchId"))
               // the probe must see the append (an unregistered batch
               // stays invisible to it for the stream's lifetime)
@@ -187,7 +185,7 @@ object StreamingCuration {
   }
 
   /** The closing batch pass over everything the stream accepted:
-    * cross-batch exact dedup (replays + beyond-watermark duplicates),
+    * cross-batch exact dedup (beyond-watermark duplicates),
     * corpus-wide MinHash near-dup removal, and any corpus-statistic
     * gates — the full [[CurationPipeline.curate]] with its
     * single-aggregation drop accounting.
@@ -203,7 +201,7 @@ object StreamingCuration {
     val p = new org.apache.hadoop.fs.Path(outDir)
     val accepted =
       if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        spark.read.parquet(outDir)
+        spark.read.parquet(outDir).select("doc_id", "text")
       else {
         import org.apache.spark.sql.types._
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

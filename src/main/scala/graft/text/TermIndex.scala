@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.sources.BatchedTable
+import graft.streaming.ServeStream
 
 /** Maintained inverted index for BM25 serving — the text-search
   * counterpart of [[graft.dedup.ShingleIndex]]: the corpus is
@@ -736,27 +737,22 @@ class TermIndex(spark: SparkSession, path: String,
     * phrase query shape: each micro-batch of (query_id, phrase
     * array<string>) rows probes via [[searchPhraseBatch]] (one
     * term-pruned postings scan, one pre-probe driver action) and
-    * appends (query_id, doc_id, n_occurrences) to `outDir`. A
+    * writes (query_id, doc_id, n_occurrences) to `outDir`. A
     * separate handle/sink from the keyword stream because the result
-    * schemas differ (bm25 vs occurrence counts); same at-least-once
-    * append posture. `slop` applies batch-wide; a stream whose rows
-    * carry their own `slop` column gets per-query windows instead.
-    * `allowed` restricts every tick ([[restrictTo]]), pinned once at
-    * stream start like [[serveStream]]'s.
+    * schemas differ (bm25 vs occurrence counts). `slop` applies
+    * batch-wide; a stream whose rows carry their own `slop` column
+    * gets per-query windows instead. `allowed` restricts every tick
+    * ([[restrictTo]]), pinned once at stream start like
+    * [[serveStream]]'s.
     */
   def servePhraseStream(queries: DataFrame, k: Int = 10, outDir: String,
                         checkpoint: String, slop: Int = 0,
                         allowed: Option[DataFrame] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val allowedPinned = allowed.map(ids =>
-      ids.select(col("doc_id").cast(LongType).as("doc_id")).localCheckpoint(true))
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        searchPhraseBatchOpt(batch, k, None, slop, allowedPinned).foreach(
-          _.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir))
-      }
-      .start()
+    val allowedPinned = ServeStream.pin(allowed, "doc_id")
+    ServeStream.start(queries, checkpoint) { (batch, write) =>
+      searchPhraseBatchOpt(batch, k, None, slop, allowedPinned).foreach(write(outDir, _))
+    }
   }
 
   /** [[phraseCountCol]] with a RUNTIME slot count and slop (the batch
@@ -918,14 +914,12 @@ class TermIndex(spark: SparkSession, path: String,
     * [[graft.streaming.StreamingSearch]]: each micro-batch of keyword
     * queries (query_id, terms array) probes the index via
     * [[searchBatch]] (ONE term-pruned postings scan per batch) and
-    * appends (query_id, doc_id, bm25) to `outDir`. Results reflect
-    * the index AS OF each batch — a concurrently-appending ingest
-    * tier's batches become visible to queries that arrive after them
-    * (reads are plain parquet scans; the single-WRITER contract is
-    * the mutator's, probes don't participate). foreachBatch + append
-    * is at-least-once: a retried query batch appends its results
-    * twice — dedup downstream on (query_id, doc_id) if the sink must
-    * be exactly-once. Caller stops the returned handle. `allowed`
+    * writes (query_id, doc_id, bm25) to `outDir` through
+    * [[ServeStream]]. Results reflect the index AS OF each batch — a
+    * concurrently-appending ingest tier's batches become visible to
+    * queries that arrive after them (reads are plain parquet scans;
+    * the single-WRITER contract is the mutator's, probes don't
+    * participate). Caller stops the returned handle. `allowed`
     * restricts every tick's candidates ([[restrictTo]]); it is PINNED
     * at stream start (localCheckpoint) so an expensive or non-
     * deterministic producing plan doesn't re-execute inside every
@@ -935,19 +929,14 @@ class TermIndex(spark: SparkSession, path: String,
   def serveStream(queries: DataFrame, k: Int = 10, outDir: String,
                   checkpoint: String, allowed: Option[DataFrame] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val allowedPinned = allowed.map(ids =>
-      ids.select(col("doc_id").cast(LongType).as("doc_id")).localCheckpoint(true))
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // one pre-probe job per micro-batch: the Opt variant's merged
-        // validate-and-collect doubles as the empty-batch check
-        // (watermark ticks deliver empty batches — None skips the
-        // probe and the append entirely)
-        searchBatchOpt(batch, k, None, allowedPinned).foreach(
-          _.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir))
-      }
-      .start()
+    val allowedPinned = ServeStream.pin(allowed, "doc_id")
+    ServeStream.start(queries, checkpoint) { (batch, write) =>
+      // one pre-probe job per micro-batch: the Opt variant's merged
+      // validate-and-collect doubles as the empty-batch check
+      // (watermark ticks deliver empty batches — None skips the
+      // probe and the write entirely)
+      searchBatchOpt(batch, k, None, allowedPinned).foreach(write(outDir, _))
+    }
   }
 
   /** Fold all per-batch directories into `batch=compact0` (+ the

@@ -9,6 +9,7 @@ import graft.{QueryModule, Tables}
 import graft.embed.HashEmbedder
 import graft.expressions.TopKAgg
 import graft.expressions.VectorExpressions._
+import graft.streaming.ServeStream
 
 /** Serving-layer operators a production vector DB offers on top of the
   * raw knn core (SURVEY §2 block A): hybrid keyword+vector retrieval,
@@ -417,13 +418,12 @@ object Serving extends QueryModule {
     * set (keyword [[graft.text.TermIndex.serveStream]], phrase
     * `servePhraseStream`, knn [[VectorStore.serveStream]]): each
     * micro-batch of (query_id, terms, qv) rows probes both maintained
-    * indexes and appends the fused per-query top-k to `outDir`,
-    * at-least-once. Full mode passthrough like [[hybridJoin]]; the
-    * vector arm's serving state (centroids, PQ meta, salt table)
-    * resolves ONCE at stream start via
-    * `VectorStore.searchJoinServing`, the keyword arm's allowed set
-    * is pinned once, and searchBatch's validate-and-collect stays the
-    * one pre-probe driver action per tick.
+    * indexes and writes the fused per-query top-k to `outDir` through
+    * [[graft.streaming.ServeStream]]. Full mode passthrough like
+    * [[hybridJoin]]; arm state (vector serving closure, pinned allowed
+    * set) resolves ONCE at stream start via [[fusionServing]], and
+    * searchBatch's validate-and-collect stays the one pre-probe driver
+    * action per tick.
     */
   def serveHybridStream(idx: graft.text.TermIndex, store: VectorStore,
                         queries: DataFrame, outDir: String, checkpoint: String,
@@ -436,23 +436,11 @@ object Serving extends QueryModule {
                         vecShortlist: Int = 100,
                         wKw: Double = 1.0, wVec: Double = 1.0)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // pin the allowed set ONCE (both arms read the same checkpoint —
-    // the vector arm's serving pin re-reads it, never the lineage)
-    val kwAllowed = allowed.map(ids =>
-      ids.select(col("doc_id").cast(LongType).as("doc_id")).localCheckpoint(true))
-    val vecArm = store.searchJoinServing(topK = shortlist, nprobe = nprobe,
-      allowed = vecAllowed(store, kwAllowed), excludeSelf = excludeSelf,
-      maxRowsPerTask = maxRowsPerTask, compressed = compressed,
-      shortlist = vecShortlist)
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          hybridJoinWith(idx, batch, topK, shortlist, rrfK, kwAllowed, vecArm,
-            wKw, wVec)
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-      }
-      .start()
+    val fs = fusionServing(idx, store, topK, shortlist, nprobe, rrfK,
+      allowed, excludeSelf, maxRowsPerTask, compressed, vecShortlist)
+    ServeStream.start(queries, checkpoint) { (batch, write) =>
+      if (!batch.isEmpty) write(outDir, fs.hybridPage(batch, wKw, wVec))
+    }
   }
 
   /** Query-by-example served from BOTH maintained indexes — the
@@ -519,19 +507,16 @@ object Serving extends QueryModule {
       allowed = None, excludeSelf = true,
       maxRowsPerTask = maxRowsPerTask, compressed = compressed,
       shortlist = vecShortlist)
-    ids.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val page = batch.select(col("query_id").cast(LongType))
-          .collect().map(_.getLong(0)).toSeq
-        if (page.nonEmpty) {
-          val (res, caches) = mltJoinWith(idx, page, topK, shortlist, rrfK,
-            vecArm, store.vectorsOf(page))
-          try res.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-          finally caches.foreach(_.unpersist())
-        }
+    ServeStream.start(ids, checkpoint) { (batch, write) =>
+      val page = batch.select(col("query_id").cast(LongType))
+        .collect().map(_.getLong(0)).toSeq
+      if (page.nonEmpty) {
+        val (res, caches) = mltJoinWith(idx, page, topK, shortlist, rrfK,
+          vecArm, store.vectorsOf(page))
+        try write(outDir, res)
+        finally caches.foreach(_.unpersist())
       }
-      .start()
+    }
   }
 
   /** RRF fusion of per-query (doc, rank) shortlists — shared by
@@ -1097,16 +1082,12 @@ object Serving extends QueryModule {
                         outDir: String, checkpoint: String, topK: Int = 10)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val cComp = ServedMaxsim.servedChunks(s, d)
-    ids.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val page = batch.select(col("query_id").cast(LongType))
-          .collect().map(_.getLong(0)).toSeq
-        if (page.nonEmpty)
-          maxsimFrom(cComp, graft.Tables.documents(s, d), page, topK)
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-      }
-      .start()
+    ServeStream.start(ids, checkpoint) { (batch, write) =>
+      val page = batch.select(col("query_id").cast(LongType))
+        .collect().map(_.getLong(0)).toSeq
+      if (page.nonEmpty)
+        write(outDir, maxsimFrom(cComp, graft.Tables.documents(s, d), page, topK))
+    }
   }
 
   /** Per-dim integer components CTE chain shared by both sides of the
@@ -1268,10 +1249,10 @@ object Serving extends QueryModule {
   /** Continuous three-arm serving — [[serveHybridStream]]'s treatment
     * for [[triJoin]]: each micro-batch of (query_id, terms, phrase,
     * qv) rows probes the positional index twice (BM25 + phrase) and
-    * the vector store once, appending the fused top-k to `outDir`,
-    * at-least-once. The vector arm's serving state resolves ONCE at
-    * stream start (`VectorStore.searchJoinServing`); the allowed set
-    * is pinned once for all three arms.
+    * the vector store once, writing the fused top-k to `outDir`
+    * through [[graft.streaming.ServeStream]]. Arm state resolves ONCE
+    * at stream start via [[fusionServing]]; the allowed set is pinned
+    * once for all three arms.
     */
   def serveTriStream(idx: graft.text.TermIndex, store: VectorStore,
                      queries: DataFrame, outDir: String, checkpoint: String,
@@ -1283,20 +1264,11 @@ object Serving extends QueryModule {
                      compressed: Boolean = false,
                      vecShortlist: Int = 100)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val pinned = allowed.map(ids =>
-      ids.select(col("doc_id").cast(LongType).as("doc_id")).localCheckpoint(true))
-    val vecArm = store.searchJoinServing(topK = shortlist, nprobe = nprobe,
-      allowed = vecAllowed(store, pinned), excludeSelf = excludeSelf,
-      maxRowsPerTask = maxRowsPerTask, compressed = compressed,
-      shortlist = vecShortlist)
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          triJoinWith(idx, batch, topK, shortlist, rrfK, pinned, vecArm)
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-      }
-      .start()
+    val fs = fusionServing(idx, store, topK, shortlist, nprobe, rrfK,
+      allowed, excludeSelf, maxRowsPerTask, compressed, vecShortlist)
+    ServeStream.start(queries, checkpoint) { (batch, write) =>
+      if (!batch.isEmpty) write(outDir, fs.triPage(batch))
+    }
   }
 
   // --- cross-arity fusion serving: probe arms once, fuse many ways ---
@@ -1421,6 +1393,18 @@ object Serving extends QueryModule {
       fuseRrf3(a.kw, a.vec, a.ph.getOrElse(throw new IllegalArgumentException(
         "tri fusion needs arms built from a (query_id, terms, phrase, qv) batch")),
         topK, rrfK)
+
+    /** One batch's [[hybridJoin]] page as one un-pinned plan over this
+      * session's arm state — the single-fusion streams' per-tick probe.
+      */
+    private[Serving] def hybridPage(queries: DataFrame, wKw: Double,
+                                    wVec: Double): DataFrame =
+      hybridJoinWith(idx, queries, topK, shortlist, rrfK, allowed, vecArm,
+        wKw, wVec)
+
+    /** One batch's [[triJoin]] page, as [[hybridPage]]. */
+    private[Serving] def triPage(queries: DataFrame): DataFrame =
+      triJoinWith(idx, queries, topK, shortlist, rrfK, allowed, vecArm)
   }
 
   /** Build a [[FusionServing]] session over both maintained indexes —
@@ -1435,8 +1419,7 @@ object Serving extends QueryModule {
                     maxRowsPerTask: Long = 0L,
                     compressed: Boolean = false,
                     vecShortlist: Int = 100): FusionServing = {
-    val pinned = allowed.map(ids =>
-      ids.select(col("doc_id").cast(LongType).as("doc_id")).localCheckpoint(true))
+    val pinned = ServeStream.pin(allowed, "doc_id")
     val vecArm = store.searchJoinServing(topK = shortlist, nprobe = nprobe,
       allowed = vecAllowed(store, pinned), excludeSelf = excludeSelf,
       maxRowsPerTask = maxRowsPerTask, compressed = compressed,
@@ -1474,8 +1457,9 @@ object Serving extends QueryModule {
 
   /** Continuous cross-arity serving — [[fusionServing]] as a stream:
     * each micro-batch of (query_id, terms, phrase, qv) rows probes
-    * the three arms ONCE, appends the two-arm RRF page to
-    * `hybridOut` AND the three-arm page to `triOut`, then releases
+    * the three arms ONCE, writes the two-arm RRF page to
+    * `hybridOut` AND the three-arm page to `triOut` (both through
+    * [[graft.streaming.ServeStream]]), then releases
     * the pinned arm frames. The one-stream form of "a service that
     * renders both fusion styles": [[serveHybridStream]] +
     * [[serveTriStream]] side by side would probe the vector store
@@ -1513,20 +1497,15 @@ object Serving extends QueryModule {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val fs = fusionServing(idx, store, topK, shortlist, nprobe, rrfK,
       allowed, excludeSelf, maxRowsPerTask, compressed, vecShortlist)
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val a = if (cacheArms) fs.armsCached(batch) else fs.arms(batch)
-          try {
-            fs.hybrid(a, wKw, wVec)
-              .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(hybridOut)
-            fs.tri(a)
-              .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(triOut)
-          } finally if (!cacheArms) a.release()
-        }
+    ServeStream.start(queries, checkpoint) { (batch, write) =>
+      if (!batch.isEmpty) {
+        val a = if (cacheArms) fs.armsCached(batch) else fs.arms(batch)
+        try {
+          write(hybridOut, fs.hybrid(a, wKw, wVec))
+          write(triOut, fs.tri(a))
+        } finally if (!cacheArms) a.release()
       }
-      .start()
+    }
   }
 
   /** The registered three-arm batch — #9m's shape plus the phrase

@@ -1820,10 +1820,11 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     * contract for the vector store: each micro-batch of (query_id, qv)
     * rows probes via [[searchJoin]] (every mode included — filtered,
     * salted, compressed-with-exact-re-rank, and since round 13 the L2
-    * metric, whose contract checks fire at stream start) and appends (query_id,
-    * rank, <idCol>, score) to `outDir`, at-least-once. Completes the
-    * serving pair with [[graft.streaming.StreamingSearch]]: that
-    * object scores an in-memory corpus frame; this serves the
+    * metric, whose contract checks fire at stream start) and writes
+    * (query_id, rank, <idCol>, score) to `outDir` through
+    * [[graft.streaming.ServeStream]]. Completes the serving pair with
+    * [[graft.streaming.StreamingSearch]]: that object scores an
+    * in-memory corpus frame; this serves the
     * PERSISTED store — shard partition layout, codebooks, and salt
     * discipline included.
     *
@@ -1850,16 +1851,11 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val probe = searchJoinServing(topK, nprobe, allowed, excludeSelf,
       maxRowsPerTask, compressed, shortlist, metric)
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // watermark ticks deliver empty batches — skip the probe and
-        // the append entirely (isEmpty is a limit-1 driver check)
-        if (!batch.isEmpty)
-          probe(batch)
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-      }
-      .start()
+    graft.streaming.ServeStream.start(queries, checkpoint) { (batch, write) =>
+      // watermark ticks deliver empty batches — skip the probe and
+      // the write entirely (isEmpty is a limit-1 driver check)
+      if (!batch.isEmpty) write(outDir, probe(batch))
+    }
   }
 
   /** The resolved join-scale serving closure [[serveStream]] (and
@@ -2355,7 +2351,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
 
   /** Streamed radius serving — [[serveStream]]'s contract for
     * [[rangeJoin]]: a stream of (query_id, qv) rows is matched against
-    * the persisted store each micro-batch, appending every corpus row
+    * the persisted store each micro-batch, writing every corpus row
     * within cosine `minScore` to `outDir` as (query_id, <idCol>,
     * score), unranked. The near-duplicate / compliance-sweep gate as
     * a continuous service: serving state resolves ONCE at stream
@@ -2382,14 +2378,9 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     val depth = targetRecall.fold(nprobe)(t => nprobeForRange(minScore, t))
     val probe = rangeJoinServing(minScore, depth, allowed, excludeSelf,
       maxRowsPerTask, compressed, margin)
-    queries.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          probe(batch)
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-      }
-      .start()
+    graft.streaming.ServeStream.start(queries, checkpoint) { (batch, write) =>
+      if (!batch.isEmpty) write(outDir, probe(batch))
+    }
   }
 
   /** Shared once-per-stream resolution for the join-scale serving
@@ -2410,8 +2401,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
       throw new IllegalStateException(
         "compressed serving needs a PQ-built store: " +
           "build(pqSubspaces > 0)"))) else None
-    val allowedPinned = allowed.map(ids =>
-      ids.select(col(idCol).cast(LongType).as(idCol)).localCheckpoint(true))
+    val allowedPinned = graft.streaming.ServeStream.pin(allowed, idCol)
     val salts =
       if (maxRowsPerTask <= 0L) None
       else {

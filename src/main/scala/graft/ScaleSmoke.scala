@@ -403,8 +403,8 @@ object ScaleSmoke {
     // per-row RECONSTRUCTION (dim multiply-adds per candidate pair),
     // (b) Adc builds each probe's M·K lookup table once per partition
     // and pays M lookups per pair. Corpus is 0.4x the 64-d volume so
-    // the section stays minutes-bounded; DevAdcBench sweeps more
-    // shapes.
+    // the section stays minutes-bounded; the DevAdcBench sweep of more
+    // shapes can be read at commit 918c039.
     val dimH = 256
     val nVecH = math.max(nVec * 2 / 5, 1000)
     val nQH = math.max(nQ * 2 / 5, 100)

@@ -1,7 +1,7 @@
 package graft.dedup
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -96,7 +96,10 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
   // plain overwrite-parquet artifacts, not BatchedTable batch sets —
   // recap's fold/rewrite recovery must never touch them
   private[dedup] val cfgDir = s"$path/bandingcfg"
-  private[dedup] val curveDir = s"$path/bandcurve"
+  private val bandCurve = new graft.Curve(spark, s"$path/bandcurve", "banding",
+    Seq("threshold", "sample_docs"), Seq(
+      "stamp_docs" -> "the index's live doc count moved",
+      "stamp_shingles" -> "the index's live shingle-row count moved"))
 
   private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -171,7 +174,8 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
     dirs.foreach(d => graft.sources.BatchedTable.clearTable(fs, d))
     // a rebuild resets the banding to the default and invalidates any
     // measured curve (it described the previous corpus)
-    Seq(cfgDir, curveDir).foreach(d => fs.delete(new Path(d), true))
+    fs.delete(new Path(cfgDir), true)
+    bandCurve.drop()
     val sh = Dedup.shinglesOf(corpus).cache()
     writeBatch(sh.groupBy("s").agg(count(lit(1)).as("df")), dfDir, "base")
     val n = corpus.select("doc_id").distinct().count()
@@ -495,17 +499,17 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
     }
 
   /** (live docs, live shingle rows) from the meta fold — the
-    * provenance stamp the measured banding curve carries. Append and
-    * delete both move it ([[delete]] writes negative deltas);
+    * provenance stamps the measured banding curve carries. Append and
+    * delete both move them ([[delete]] writes negative deltas);
     * [[reband]] does NOT (the curve measures candidate generation per
     * banding on the same corpus, valid across rebandings).
     */
-  private def metaStamp(): (Long, Long) = {
+  private def metaStamp(): Map[String, Long] = {
     requireDir(metaDir, "meta/ table")
     val r = readIdx(metaDir, None)
       .agg(coalesce(sum("n_docs"), lit(0L)),
         coalesce(sum("n_shingles"), lit(0L))).head()
-    (r.getLong(0), r.getLong(1))
+    Map("stamp_docs" -> r.getLong(0), "stamp_shingles" -> r.getLong(1))
   }
 
   /** MEASURED banding recall over the index's OWN universe: candidate
@@ -532,23 +536,17 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
     * the ground-truth clique join quadratic
     * ([[Dedup.DefaultTruthDfBound]]) — at corpus scale the eval is
     * sample-priced, never corpus².
+    *
+    * The curve kernel is eager (the curve is |bandings| rows, collected
+    * and returned as a local frame), so the measurement's working
+    * tables — the sampled stored shingles, the truth pair set, and the
+    * kernel's own signature/bucket tables — all release before this
+    * returns.
     */
   def evalBanding(threshold: Double = 0.8,
                   bandings: Seq[Int] = Seq(8, 16, 32, 64),
                   sampleDocs: Int = 0,
-                  truthDfBound: Long = Dedup.DefaultTruthDfBound): DataFrame =
-    evalBandingFrames(threshold, bandings, sampleDocs, truthDfBound)._1
-
-  /** [[evalBanding]]'s kernel call. The curve kernel is EAGER since
-    * r16 (the curve is |bandings| rows, collected and returned as a
-    * local frame), so the measurement's working tables — the sampled
-    * stored shingles, the truth pair set, and the kernel's own
-    * signature/bucket tables — all release before this returns; the
-    * caches seq stays for the signature's sake but is always empty.
-    */
-  private def evalBandingFrames(threshold: Double, bandings: Seq[Int],
-                                sampleDocs: Int,
-                                truthDfBound: Long): (DataFrame, Seq[DataFrame]) = {
+                  truthDfBound: Long = Dedup.DefaultTruthDfBound): DataFrame = {
     requireDir(shDir, "sh/ table")
     val live = minusDeleted(readIdx(shDir, None), None).select("doc_id", "s")
     val sh = (if (sampleDocs <= 0) live
@@ -569,7 +567,7 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
       maxBucketFraction = Dedup.DefaultMaxDfFraction, bandCapFloor = 100L)
     sh.unpersist()
     org.apache.spark.sql.graftshim.CheckpointInterop.unpersistCheckpoint(truth)
-    (curve, Seq.empty)
+    curve
   }
 
   /** Measure and PERSIST the banding curve for `threshold` with the
@@ -582,32 +580,14 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
                      bandings: Seq[Int] = Seq(8, 16, 32, 64),
                      sampleDocs: Int = 0,
                      truthDfBound: Long = Dedup.DefaultTruthDfBound): DataFrame = {
-    val (nD, nS) = metaStamp()
-    val (curve, caches) =
-      evalBandingFrames(threshold, bandings, sampleDocs, truthDfBound)
-    val fresh = curve
+    val stamp = metaStamp()
+    val fresh = evalBanding(threshold, bandings, sampleDocs, truthDfBound)
       .withColumn("threshold", lit(threshold))
-      .withColumn("stamp_docs", lit(nD))
-      .withColumn("stamp_shingles", lit(nS))
+      .withColumn("stamp_docs", lit(stamp("stamp_docs")))
+      .withColumn("stamp_shingles", lit(stamp("stamp_shingles")))
       .withColumn("sample_docs", lit(sampleDocs.toLong))
-    val all =
-      if (!fs.exists(new Path(curveDir))) fresh
-      else spark.read.parquet(curveDir)
-        .filter(col("threshold") =!= threshold)
-        // pre-sample_docs curve dirs lack the column; their rows keep
-        // their stamps with a null sample marker
-        .unionByName(fresh, allowMissingColumns = true)
-    // model-sized rows: localCheckpoint breaks the self-read lineage
-    // before the overwrite clears the directory being read — and once
-    // pinned, the measurement's caches release (a repeated maintenance
-    // verb must not leak one cached corpus frame set per call)
-    val pinned = all.localCheckpoint(true)
-    try pinned.write.mode(SaveMode.Overwrite).parquet(curveDir)
-    finally {
-      org.apache.spark.sql.graftshim.CheckpointInterop.unpersistCheckpoint(pinned)
-      caches.foreach(_.unpersist())
-    }
-    spark.read.parquet(curveDir).filter(col("threshold") === threshold)
+    bandCurve.write(fresh, col("threshold") === threshold)
+      .filter(col("threshold") === threshold)
   }
 
   /** Re-measure every persisted banding curve whose corpus stamp no
@@ -615,27 +595,19 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
     * verb that pairs with [[bandingFor]]'s staleness refusal, the
     * [[graft.vector.VectorStore.maintainCurves]] discipline on the
     * dedup side. Each stale threshold re-measures with the bandings,
-    * and sample size, its own rows recorded (legacy rows without a
-    * sample marker re-measure full). Returns the number of thresholds
-    * re-measured; fresh curves cost only the stamp read.
+    * and sample size, its own rows recorded. Returns the number of
+    * thresholds re-measured; fresh curves cost only the stamp read.
     */
   def maintainBanding(truthDfBound: Long = Dedup.DefaultTruthDfBound): Int = {
-    if (!fs.exists(new Path(curveDir))) return 0
-    val (nD, nS) = metaStamp()
-    val t = spark.read.parquet(curveDir)
-    val ts =
-      if (t.columns.contains("sample_docs")) t
-      else t.withColumn("sample_docs", lit(0L))
-    val stale = ts.select("threshold", "stamp_docs", "stamp_shingles",
-        "sample_docs").distinct().collect()
-      .filter(r => r.getLong(1) != nD || r.getLong(2) != nS)
-      .map(r => (r.getDouble(0),
-        if (r.isNullAt(3)) 0 else r.getLong(3).toInt))
+    val stale = bandCurve.stale(metaStamp())
+      .map(r => (r.getAs[Double]("threshold"), r.getAs[Long]("sample_docs").toInt))
       .distinct
+    // read before the first re-measure overwrites the table
+    lazy val bandsOf = bandCurve.rows.fold(Map.empty[Double, Seq[Int]])(
+      _.select("threshold", "bands").collect().toSeq
+        .groupMap(_.getDouble(0))(_.getLong(1).toInt).map { case (t, b) => t -> b.sorted })
     stale.foreach { case (thr, sample) =>
-      val bandings = ts.filter(col("threshold") === thr)
-        .select("bands").collect().map(_.getLong(0).toInt).sorted.toSeq
-      measureBanding(thr, bandings, sample, truthDfBound)
+      measureBanding(thr, bandsOf(thr), sample, truthDfBound)
     }
     stale.length
   }
@@ -643,29 +615,20 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
   /** Pick a banding from the PERSISTED measured curve: the shared
     * tuner cut ([[Dedup.pickBanding]] — servable rows only, cheapest
     * meeting `target`, else highest measured recall), refusing loudly
-    * when no curve was measured for `threshold` or the corpus moved
-    * since — the `nprobeFor` discipline on the dedup side. Apply the
-    * pick with [[reband]].
+    * when no curve was measured for `threshold` (a table written in an
+    * older layout holds none) or the corpus moved since — the
+    * `nprobeFor` discipline on the dedup side. Apply the pick with
+    * [[reband]].
     */
   def bandingFor(threshold: Double = 0.8, target: Double = 0.95): (Int, Int) = {
-    require(fs.exists(new Path(curveDir)), s"no measured banding curve at " +
-      s"$curveDir — run measureBanding($threshold) first")
-    val rows = spark.read.parquet(curveDir)
-      .filter(col("threshold") === threshold)
-      .select("bands", "n_cand", "recall_x1e4", "theo_recall_x1e4",
-        "stamp_docs", "stamp_shingles")
-      .collect()
+    val curve = bandCurve.rows.map(_.filter(col("threshold") === threshold))
+    val rows = curve.fold(Array.empty[org.apache.spark.sql.Row])(
+      _.select("bands", "n_cand", "recall_x1e4", "theo_recall_x1e4").collect())
     require(rows.nonEmpty,
       s"no banding curve measured for threshold $threshold — run " +
-        s"measureBanding($threshold)")
-    val (nD, nS) = metaStamp()
-    rows.foreach { r =>
-      if (r.getLong(4) != nD || r.getLong(5) != nS)
-        throw new IllegalStateException(
-          s"banding curve for threshold $threshold is STALE (measured at " +
-            s"${r.getLong(4)} docs/${r.getLong(5)} shingle rows, index now " +
-            s"$nD/$nS) — run measureBanding($threshold) again")
-    }
+        s"measureBanding($threshold) first")
+    curve.foreach(bandCurve.requireFresh(_, metaStamp(),
+      s"run measureBanding($threshold) again"))
     Dedup.pickBanding(
       rows.map(r => (r.getLong(0).toInt, r.getLong(1), r.getLong(2), r.getLong(3))),
       threshold, target)

@@ -1,6 +1,6 @@
 package graft.vector
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -25,9 +25,20 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
   private val centDir = s"$path/centroids"
   private val pqDir = s"$path/pq"
   private val opqDir = s"$path/opq"
-  private val recallDir = s"$path/recall_eval"
-  private val rangeRecallDir = s"$path/range_recall_eval"
-  private val fusionRecallDir = s"$path/fusion_recall_eval"
+  // the three measured tuning curves; `allowed_stamp` (0 = whole
+  // corpus) keys filtered-slice measurements
+  private val storeStampsWhy = Seq(
+    "cent_stamp" -> "the store's routing centroids changed",
+    "n_rows" -> "the store row count drifted > 20%")
+  private val recallCurve = new graft.Curve(spark, s"$path/recall_eval", "recall",
+    Seq("metric", "compressed", "shortlist", "top_k", "n_queries", "allowed_stamp"),
+    storeStampsWhy)
+  private val rangeCurve = new graft.Curve(spark, s"$path/range_recall_eval",
+    "range-recall", Seq("min_score_x1e6", "n_queries", "allowed_stamp"), storeStampsWhy)
+  private val fusionCurve = new graft.Curve(spark, s"$path/fusion_recall_eval",
+    "fusion-recall", Seq("top_k", "shortlist", "rrf_k", "compressed",
+      "vec_shortlist", "allowed_stamp"), storeStampsWhy :+
+      ("idx_stamp" -> "the text index mutated (append/delete/reclaim/compact)"))
   private val sliceIdsDir = s"$path/recall_slice_ids"
   private val driftBaselineDir = s"$path/drift_baseline"
   private val fusionQueriesDir = s"$path/fusion_recall_queries"
@@ -393,13 +404,6 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
       ids.select(col(ids.columns.head).cast(LongType).as("vec_id")),
       Seq("vec_id"), "left_semi"))
 
-  /** Backfill `allowed_stamp` on curve tables persisted before the
-    * slice extension — their rows are all whole-corpus measurements.
-    */
-  private def withSliceStampCol(df: DataFrame): DataFrame =
-    if (df.columns.contains("allowed_stamp")) df
-    else df.withColumn("allowed_stamp", lit(0L))
-
   /** The tuner-side slice cut, shared by all three `nprobeFor*`
     * verbs: whole-corpus rows for an unfiltered caller; a slice
     * caller gets the mode's slice rows, REFUSING loudly when they
@@ -407,11 +411,10 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     * another tenant's slice holds the mode — one slice per mode).
     */
   private def sliceRowsFor(mode: DataFrame, aStamp: Long,
-                           family: String): DataFrame = {
-    val t = withSliceStampCol(mode)
-    if (aStamp == 0L) t.filter(col("allowed_stamp") === 0L)
+                           family: String): DataFrame =
+    if (aStamp == 0L) mode.filter(col("allowed_stamp") === 0L)
     else {
-      val rows = t.filter(col("allowed_stamp") =!= 0L)
+      val rows = mode.filter(col("allowed_stamp") =!= 0L)
       val head = rows.select("allowed_stamp").limit(1).collect()
       if (head.nonEmpty && head(0).getLong(0) != aStamp)
         throw new IllegalStateException(
@@ -420,16 +423,69 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
             s"mode) — re-run the $family eval with allowed = this slice")
       rows
     }
+
+  /** The store's current provenance stamps: its routing and row count. */
+  private def storeStamps(): Map[String, Long] =
+    Map("cent_stamp" -> centStamp(centroids()),
+      "n_rows" -> spark.read.parquet(vecDir).count())
+
+  /** Persist one measurement of a curve family. It replaces the rows of
+    * its `mode` for its slice kind (a slice measurement replaces any
+    * slice rows of the mode, so one slice per mode; a whole-corpus one
+    * only whole-corpus rows), and every row not measured on the same
+    * `sample` (recall@k and recall@τ are different metrics per sample
+    * parameters, and the tuners read a mode without filtering them).
+    * The slice's ids persist alongside for [[maintainCurves]], and
+    * slice-id directories no curve row references any more are
+    * deleted.
+    */
+  private def writeCurve(curve: graft.Curve, fresh: DataFrame, mode: Column,
+                         sample: Column, allowed: Option[DataFrame],
+                         aStamp: Long): DataFrame = {
+    val slice = if (aStamp == 0L) col("allowed_stamp") === 0L
+                else col("allowed_stamp") =!= 0L
+    val out = curve.write(fresh, (mode && slice) || !sample)
+    allowed.foreach(ids => writeSliceIds(ids, aStamp))
+    dropUnusedSliceIds()
+    out
   }
 
-  /** Merge-side replacement cut for the measuring evals: a slice
-    * measurement replaces any slice rows of its mode (stale slices
-    * must not accumulate under content-derived stamps), a whole-corpus
-    * measurement touches only whole-corpus rows.
+  /** Persist a measured slice's id set for curve maintenance, KEYED
+    * BY ITS CONTENT STAMP (`<dir>/stamp=<allowed_stamp>`): the three
+    * curve families and their modes may each hold a DIFFERENT slice,
+    * and maintenance must re-measure each stale slice row with the
+    * ids it was measured with — a single shared id set would silently
+    * re-measure (and re-key) one family's slice with another's. Writes
+    * are idempotent per stamp (content-derived). Pinned
+    * (localCheckpoint) before the overwrite because the maintenance
+    * path re-measures FROM this very directory.
     */
-  private def sliceCondFor(aStamp: Long): org.apache.spark.sql.Column =
-    if (aStamp == 0L) col("allowed_stamp") === 0L
-    else col("allowed_stamp") =!= 0L
+  private def writeSliceIds(ids: DataFrame, aStamp: Long): Unit = {
+    val pinned = ids
+      .select(col(ids.columns.head).cast(LongType).as("vec_id"))
+      .localCheckpoint(true)
+    try pinned.write.mode(SaveMode.Overwrite)
+      .parquet(s"$sliceIdsDir/stamp=$aStamp")
+    finally org.apache.spark.sql.graftshim.CheckpointInterop
+      .unpersistCheckpoint(pinned)
+  }
+
+  /** Delete every `stamp=` directory of the persisted slice ids that
+    * no row of the three curve tables references: a slice superseded
+    * in its mode, or a table replaced by a newer layout.
+    */
+  private def dropUnusedSliceIds(): Unit = {
+    val root = new org.apache.hadoop.fs.Path(sliceIdsDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(root)) {
+      val live = Seq(recallCurve, rangeCurve, fusionCurve).flatMap(_.rows)
+        .flatMap(_.select("allowed_stamp").distinct().collect().map(_.getLong(0)))
+        .map(st => s"stamp=$st").toSet
+      fs.listStatus(root).map(_.getPath)
+        .filter(p => p.getName.startsWith("stamp=") && !live(p.getName))
+        .foreach(fs.delete(_, true))
+    }
+  }
 
   /** Route new vectors to their nearest shard and append (reference
     * /store, one HTTP call per vector there — one distributed append
@@ -885,64 +941,17 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
       // the (compressed, shortlist) keys THIS run reproduces are
       // replaced; other keys carry over ONLY if they were measured at
       // this run's (top_k, n_queries) — recall@k is a different metric
-      // per k, and nprobeFor reads the table mode-keyed without a k
-      // filter, so a stale-k carried row would silently mix curves.
-      // Carried curves are as stale as their own last run: re-measure
-      // every mode you serve after drift or a parameter change. The
-      // table is K-rows-per-mode; the carried rows ride a
-      // localCheckpoint because lazily reading and overwriting the
-      // same path would race the write with its input.
-      val rp = new org.apache.hadoop.fs.Path(recallDir)
-      val rfs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // per k. Carried curves are as stale as their own last run:
+      // re-measure every mode you serve after drift or a parameter
+      // change. The slice's ids persist alongside (last slice wins).
       val newKeys: Seq[(Boolean, Long)] =
         (false, 0L) +: (if (compressed) Seq((true, shortlist.toLong)) else Nil)
-      // one filtered-slice curve per mode — see sliceCondFor
-      val sliceCond = sliceCondFor(aStamp)
-      val all =
-        if (!rfs.exists(rp)) fresh.localCheckpoint(true)
-        else {
-          val existing = spark.read.parquet(recallDir)
-          // a table persisted before the compressed extension has no
-          // mode columns (nprobeFor reads it as raw-only): it holds
-          // only the raw curve this measurement reproduces — supersede
-          // it rather than crash on the missing column. Same for a
-          // pre-stamp table: its rows' provenance is unknowable, so
-          // carrying them would defeat the staleness contract.
-          if (!existing.columns.contains("compressed") ||
-              !existing.columns.contains("cent_stamp"))
-            fresh.localCheckpoint(true)
-          else {
-            // a table persisted before the L2 extension has no metric
-            // column — every pre-metric measurement was cosine, so
-            // stamp its rows as such and merge normally (superseding
-            // would clobber a measured compressed curve on an L2
-            // re-measurement, against the merge discipline above).
-            // Pre-slice tables (no allowed_stamp) are all whole-corpus.
-            val withMetric =
-              if (existing.columns.contains("metric")) existing
-              else existing.withColumn("metric",
-                lit(graft.plans.ShardTopKJoin.Metric.Cosine))
-            val withSlice = withSliceStampCol(withMetric)
-            fresh.unionByName(withSlice.filter(
-              !(newKeys.map(k =>
-                col("metric") === metric &&
-                col("compressed") === k._1 && col("shortlist") === k._2)
-                .reduce(_ || _) && sliceCond) &&
-              col("top_k") === topK.toLong && col("n_queries") === nq))
-              .localCheckpoint(true)
-          }
-        }
-      try all.coalesce(1).write.mode(SaveMode.Overwrite).parquet(recallDir)
-      finally org.apache.spark.sql.graftshim.CheckpointInterop.unpersistCheckpoint(all)
-      // persist the slice's id set alongside (slice-sized, distributed
-      // write): maintainCurves re-measures stale slice modes from it
-      // without the tenant re-supplying ids — last slice wins, the
-      // one-slice-per-store convention above. Pinned first: the
-      // maintenance path's `ids` READS this very directory, and an
-      // unpinned overwrite would delete the files under its own scan.
-      allowed.foreach(ids => writeSliceIds(ids, aStamp))
+      writeCurve(recallCurve, fresh,
+        mode = col("metric") === metric && newKeys.map(k =>
+          col("compressed") === k._1 && col("shortlist") === k._2).reduce(_ || _),
+        sample = col("top_k") === topK.toLong && col("n_queries") === nq,
+        allowed, aStamp)
     } finally org.apache.spark.sql.graftshim.CheckpointInterop.unpersistCheckpoint(hits)
-    spark.read.parquet(recallDir)
   }
 
   /** Recall@topK of the COMPRESSED serving path — [[search]]
@@ -1048,82 +1057,6 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     (frame, recon)
   }
 
-  /** Re-measure every persisted recall-curve mode whose provenance
-    * stamp no longer matches the store — the maintenance verb that
-    * pairs with [[nprobeFor]]'s staleness refusal: a scheduler calls
-    * this after [[maintain]]/[[build]]/mass ingest and serving never
-    * sees the refusal. Reads the K-row curve table, compares each
-    * mode's (cent_stamp, n_rows) against the live store, and re-runs
-    * [[evalRecall]] ONLY for stale modes, at the parameters they were
-    * originally measured with (the raw curve rides along with any
-    * compressed re-measurement — evalRecall always refreshes it). A
-    * legacy stampless table re-measures wholesale (its provenance is
-    * unknowable). Returns true when anything was re-measured, false
-    * when every mode was already fresh (no store scan beyond the
-    * row-count probe).
-    */
-  def refreshRecall(): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(recallDir)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      return false
-    val t = spark.read.parquet(recallDir)
-    val legacy = !t.columns.contains("cent_stamp")
-    val modes =
-      if (legacy) {
-        // provenance unknowable: re-measure wholesale at the table's
-        // own parameters (or defaults for pre-parameter layouts).
-        // "Wholesale" must include any COMPRESSED modes a post-
-        // compressed pre-stamp table holds: the first evalRecall call
-        // supersedes a stampless table entirely, so a raw-only
-        // re-measurement would erase those curves un-re-measured and
-        // nprobeFor(compressed = true) would silently full-probe.
-        val nq = if (t.columns.contains("n_queries"))
-          t.select("n_queries").head().getLong(0).toInt else 64
-        val k = if (t.columns.contains("top_k"))
-          t.select("top_k").head().getLong(0).toInt else 10
-        val comps =
-          if (t.columns.contains("compressed"))
-            t.filter(col("compressed")).select("shortlist").distinct()
-              .collect().map(r => (nq, k, true, r.getLong(0).toInt)).toSeq
-          else Nil
-        if (comps.nonEmpty) comps else Seq((nq, k, false, 0))
-      } else {
-        val nowStamp = centStamp(centroids())
-        lazy val nowRows = spark.read.parquet(vecDir).count()
-        // slice rows (allowed_stamp != 0) are maintainCurves' job — it
-        // holds the persisted slice ids; re-measuring whole-corpus here
-        // would not heal them, only loop on their stale stamps
-        val ts =
-          if (t.columns.contains("allowed_stamp"))
-            t.filter(col("allowed_stamp") === 0L)
-          else t
-        ts.select("n_queries", "top_k", "compressed", "shortlist",
-            "cent_stamp", "n_rows").distinct().collect()
-          .filter { r =>
-            r.getLong(4) != nowStamp ||
-              math.abs(nowRows - r.getLong(5)) * 5L > math.max(nowRows, r.getLong(5))
-          }
-          .map(r => (r.getLong(0).toInt, r.getLong(1).toInt,
-            r.getBoolean(2), r.getLong(3).toInt)).toSeq
-      }
-    if (modes.isEmpty) return false
-    // the raw mode refreshes as a side effect of every compressed
-    // re-measurement — run it alone only when no compressed mode needs
-    // re-measuring. All modes share one (n_queries, top_k):
-    // evalRecall's merge filters carried rows to the current run's
-    // parameters at EVERY write, so the persisted table is invariantly
-    // single-parameter and sequential per-mode calls here cannot
-    // clobber each other across parameter sets.
-    val comp = modes.filter(_._3)
-    if (comp.isEmpty) {
-      val (nq, k, _, _) = modes.head
-      evalRecall(nq, k)
-    } else comp.foreach { case (nq, k, _, sl) =>
-      evalRecall(nq, k, compressed = true, shortlist = sl)
-    }
-    true
-  }
-
   /** Smallest nprobe whose persisted measured recall meets `target`
     * (numShards when nothing does, or when [[evalRecall]] has not run
     * — full probe is always recall 1.0 by construction ON THE RAW
@@ -1145,12 +1078,13 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     * changed under build/refreshCentroids/setCentroids — or a > 20%
     * row-count drift (mass upserts/deletes shifting the distribution)
     * REFUSES loudly instead of silently tuning nprobe from measurements
-    * of a store that no longer exists; re-run evalRecall to heal. The
-    * check costs a k-row centroid read plus one store count job — fine
-    * for the resolve-once-and-reuse serving pattern; a per-query hot
-    * path passes `checkFresh = false` against a curve it refreshes on
-    * its own maintenance schedule. Pre-stamp tables (legacy) skip the
-    * check — their provenance is unknowable; re-measure.
+    * of a store that no longer exists; re-run evalRecall (or
+    * [[maintainCurves]]) to heal. The check costs a k-row centroid
+    * read plus one store count job — fine for the
+    * resolve-once-and-reuse serving pattern; a per-query hot path
+    * passes `checkFresh = false` against a curve it refreshes on its
+    * own maintenance schedule. A table written in an older layout is
+    * no curve (full probing) until the next evalRecall replaces it.
     *
     * `allowed` (round 14): tune a FILTERED serving path on its own
     * measured slice curve (`evalRecall(allowed = ...)` first). An
@@ -1162,60 +1096,17 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
   def nprobeFor(target: Double, compressed: Boolean = false,
                 shortlist: Int = 0, checkFresh: Boolean = true,
                 metric: String = graft.plans.ShardTopKJoin.Metric.Cosine,
-                allowed: Option[DataFrame] = None): Int = {
-    val wantCos = metric == graft.plans.ShardTopKJoin.Metric.Cosine
-    val p = new org.apache.hadoop.fs.Path(recallDir)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) numShards
-    else {
-      val t = spark.read.parquet(recallDir)
-      // curves persisted before the compressed extension carry no mode
-      // columns: they are raw-path COSINE measurements; pre-metric
-      // tables (compressed column, no metric column) are cosine too —
-      // an unmeasured mode falls through to full probing below, which
-      // is exact, never a silently wrong tune
-      val modeAll =
-        if (!t.columns.contains("compressed")) {
-          if (compressed || !wantCos) t.limit(0) else t
-        } else {
-          val tm =
-            if (t.columns.contains("metric")) t
-            else t.withColumn("metric",
-              lit(graft.plans.ShardTopKJoin.Metric.Cosine))
-          val m0 = tm.filter(col("metric") === metric)
-          if (compressed)
-            m0.filter(col("compressed") && col("shortlist") === shortlist.toLong)
-          else m0.filter(!col("compressed"))
-        }
-      // slice keying: a filtered caller tunes ONLY on a curve measured
-      // for ITS slice (whole-corpus geometry over- or under-probes a
-      // selective slice); drifted slices refuse loudly (sliceRowsFor)
-      val mode = sliceRowsFor(modeAll, sliceStamp(allowed), "recall")
-      if (checkFresh && t.columns.contains("cent_stamp")) {
-        // one measurement run per mode key (replaced wholesale by
-        // evalRecall), so any row carries the mode's provenance
-        val head = mode.select("cent_stamp", "n_rows").limit(1).collect()
-        if (head.nonEmpty) {
-          val (mStamp, mRows) = (head(0).getLong(0), head(0).getLong(1))
-          if (mStamp != centStamp(centroids()))
-            throw new IllegalStateException(
-              "recall curve is STALE: the store's routing centroids changed " +
-                "since it was measured (build/refreshCentroids/setCentroids) — " +
-                "re-run evalRecall, or pass checkFresh = false to knowingly " +
-                "serve on the stale curve")
-          val nowRows = spark.read.parquet(vecDir).count()
-          if (math.abs(nowRows - mRows) * 5L > math.max(nowRows, mRows))
-            throw new IllegalStateException(
-              s"recall curve is STALE: store row count drifted > 20% since " +
-                s"measurement ($mRows -> $nowRows) — re-run evalRecall, or " +
-                "pass checkFresh = false")
-        }
-      }
-      val rows = mode
-        .filter(col("recall_x1e4") >= math.ceil(target * 10000).toLong)
-        .agg(min("nprobe")).head()
-      if (rows.isNullAt(0)) numShards else rows.getLong(0).toInt
+                allowed: Option[DataFrame] = None): Int =
+    recallCurve.rows.fold(numShards) { t =>
+      // raw rows carry shortlist 0
+      val mode = sliceRowsFor(t.filter(col("metric") === metric &&
+          col("compressed") === compressed &&
+          col("shortlist") === (if (compressed) shortlist.toLong else 0L)),
+        sliceStamp(allowed), "recall")
+      if (checkFresh) recallCurve.requireFresh(mode, storeStamps(),
+        "re-run evalRecall, or pass checkFresh = false to knowingly serve on it")
+      graft.Curve.pick(mode, target, numShards)
     }
-  }
 
   /** [[search]] with nprobe chosen from the persisted recall curve:
     * the cheapest probe depth whose MEASURED recall@topK meets
@@ -1273,44 +1164,8 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
       .withColumn("allowed_stamp", lit(aStamp))
       .select("nprobe", "recall_x1e4", "n_matches", "n_queries",
         "min_score_x1e6", "cent_stamp", "n_rows", "allowed_stamp")
-    val sliceCond = sliceCondFor(aStamp)
-    val rp = new org.apache.hadoop.fs.Path(rangeRecallDir)
-    val rfs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val all =
-      if (!rfs.exists(rp)) fresh.localCheckpoint(true)
-      else {
-        val existing = spark.read.parquet(rangeRecallDir)
-        val withSlice = withSliceStampCol(existing)
-        fresh.unionByName(withSlice.filter(
-          !(col("min_score_x1e6") === tauKey && sliceCond) &&
-            col("n_queries") === nq))
-          .localCheckpoint(true)
-      }
-    try all.coalesce(1).write.mode(SaveMode.Overwrite).parquet(rangeRecallDir)
-    finally org.apache.spark.sql.graftshim.CheckpointInterop.unpersistCheckpoint(all)
-    allowed.foreach(ids => writeSliceIds(ids, aStamp))
-    spark.read.parquet(rangeRecallDir)
-  }
-
-  /** Persist a measured slice's id set for curve maintenance, KEYED
-    * BY ITS CONTENT STAMP (`<dir>/stamp=<allowed_stamp>`): the three
-    * curve families and their modes may each hold a DIFFERENT slice,
-    * and maintenance must re-measure each stale slice row with the
-    * ids it was measured with — a single shared id set would silently
-    * re-measure (and re-key) one family's slice with another's. Writes
-    * are idempotent per stamp (content-derived); superseded stamps'
-    * directories linger as bounded garbage until an operator clears
-    * them. Pinned (localCheckpoint) before the overwrite because the
-    * maintenance path re-measures FROM this very directory.
-    */
-  private def writeSliceIds(ids: DataFrame, aStamp: Long): Unit = {
-    val pinned = ids
-      .select(col(ids.columns.head).cast(LongType).as("vec_id"))
-      .localCheckpoint(true)
-    try pinned.write.mode(SaveMode.Overwrite)
-      .parquet(s"$sliceIdsDir/stamp=$aStamp")
-    finally org.apache.spark.sql.graftshim.CheckpointInterop
-      .unpersistCheckpoint(pinned)
+    writeCurve(rangeCurve, fresh, mode = col("min_score_x1e6") === tauKey,
+      sample = col("n_queries") === nq, allowed, aStamp)
   }
 
   /** Cheapest probe depth whose MEASURED radius recall at `minScore`
@@ -1321,37 +1176,15 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     */
   def nprobeForRange(minScore: Double, target: Double,
                      checkFresh: Boolean = true,
-                     allowed: Option[DataFrame] = None): Int = {
-    val p = new org.apache.hadoop.fs.Path(rangeRecallDir)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      numShards
-    else {
-      val tau = spark.read.parquet(rangeRecallDir)
-        .filter(col("min_score_x1e6") === math.round(minScore * 1e6))
-      val curve = sliceRowsFor(tau, sliceStamp(allowed), "range-recall")
-      if (checkFresh) {
-        val head = curve.select("cent_stamp", "n_rows").limit(1).collect()
-        if (head.nonEmpty) {
-          val (mStamp, mRows) = (head(0).getLong(0), head(0).getLong(1))
-          if (mStamp != centStamp(centroids()))
-            throw new IllegalStateException(
-              "range-recall curve is STALE: the store's routing centroids " +
-                "changed since it was measured — re-run evalRangeRecall, or " +
-                "pass checkFresh = false to knowingly serve on the stale curve")
-          val nowRows = spark.read.parquet(vecDir).count()
-          if (math.abs(nowRows - mRows) * 5L > math.max(nowRows, mRows))
-            throw new IllegalStateException(
-              s"range-recall curve is STALE: store row count drifted > 20% " +
-                s"since measurement ($mRows -> $nowRows) — re-run " +
-                "evalRangeRecall, or pass checkFresh = false")
-        }
-      }
-      val rows = curve
-        .filter(col("recall_x1e4") >= math.ceil(target * 10000).toLong)
-        .agg(min("nprobe")).head()
-      if (rows.isNullAt(0)) numShards else rows.getLong(0).toInt
+                     allowed: Option[DataFrame] = None): Int =
+    rangeCurve.rows.fold(numShards) { t =>
+      val curve = sliceRowsFor(
+        t.filter(col("min_score_x1e6") === math.round(minScore * 1e6)),
+        sliceStamp(allowed), "range-recall")
+      if (checkFresh) rangeCurve.requireFresh(curve, storeStamps(),
+        "re-run evalRangeRecall, or pass checkFresh = false to knowingly serve on it")
+      graft.Curve.pick(curve, target, numShards)
     }
-  }
 
   /** [[rangeJoin]] with nprobe chosen from the persisted radius curve
     * — the cheapest depth whose measured τ-recall meets `targetRecall`
@@ -1484,35 +1317,16 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
         .select("nprobe", "recall_x1e4", "n_queries", "top_k", "shortlist",
           "rrf_k", "compressed", "vec_shortlist", "cent_stamp", "idx_stamp",
           "n_rows", "allowed_stamp")
-      val sliceCond = sliceCondFor(aStamp)
-      val rp = new org.apache.hadoop.fs.Path(fusionRecallDir)
-      val rfs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val all =
-        if (!rfs.exists(rp)) fresh.localCheckpoint(true)
-        else {
-          val existing = spark.read.parquet(fusionRecallDir)
-          val withSlice = withSliceStampCol(existing)
-          fresh.unionByName(withSlice.filter(
-            !(col("top_k") === topK.toLong &&
-              col("shortlist") === shortlist.toLong &&
-              col("rrf_k") === rrfK.toLong &&
-              col("compressed") === compressed &&
-              col("vec_shortlist") ===
-                (if (compressed) vecShortlist.toLong else 0L) &&
-              sliceCond) &&
-            col("n_queries") === nq))
-          .localCheckpoint(true)
-        }
-      try all.coalesce(1).write.mode(SaveMode.Overwrite).parquet(fusionRecallDir)
-      finally org.apache.spark.sql.graftshim.CheckpointInterop.unpersistCheckpoint(all)
-      allowed.foreach(ids => writeSliceIds(ids, aStamp))
+      val out = writeCurve(fusionCurve, fresh,
+        fusionMode(topK, shortlist, rrfK, compressed, vecShortlist),
+        sample = col("n_queries") === nq, allowed, aStamp)
       // persist the query SAMPLE alongside the curve (sample-sized),
       // so [[maintainCurves]] can re-measure a stale fusion curve
       // without the caller re-supplying terms — last measurement's
       // sample wins (one sample per store; re-measured tables reflect
       // it)
       q.coalesce(1).write.mode(SaveMode.Overwrite).parquet(fusionQueriesDir)
-      spark.read.parquet(fusionRecallDir)
+      out
     } finally org.apache.spark.sql.graftshim.CheckpointInterop.unpersistCheckpoint(q)
   }
 
@@ -1532,50 +1346,23 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
                       checkFresh: Boolean = true,
                       compressed: Boolean = false,
                       vecShortlist: Int = 100,
-                      allowed: Option[DataFrame] = None): Int = {
-    val p = new org.apache.hadoop.fs.Path(fusionRecallDir)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-      numShards
-    else {
-      val mode = spark.read.parquet(fusionRecallDir)
-        .filter(col("top_k") === topK.toLong &&
-          col("shortlist") === shortlist.toLong &&
-          col("rrf_k") === rrfK.toLong &&
-          col("compressed") === compressed &&
-          col("vec_shortlist") ===
-            (if (compressed) vecShortlist.toLong else 0L))
-      val curve = sliceRowsFor(mode, sliceStamp(allowed), "fusion-recall")
-      if (checkFresh) {
-        val head = curve.select("cent_stamp", "idx_stamp", "n_rows")
-          .limit(1).collect()
-        if (head.nonEmpty) {
-          val (mStamp, mIdx, mRows) =
-            (head(0).getLong(0), head(0).getLong(1), head(0).getLong(2))
-          if (mStamp != centStamp(centroids()))
-            throw new IllegalStateException(
-              "fusion-recall curve is STALE: the store's routing centroids " +
-                "changed since it was measured — re-run evalFusionRecall, or " +
-                "pass checkFresh = false to knowingly serve on the stale curve")
-          if (mIdx != idx.contentStamp())
-            throw new IllegalStateException(
-              "fusion-recall curve is STALE: the text index mutated since it " +
-                "was measured (append/delete/reclaim/compact) — the keyword " +
-                "arm's ranks are provenance too; re-run evalFusionRecall, or " +
-                "pass checkFresh = false")
-          val nowRows = spark.read.parquet(vecDir).count()
-          if (math.abs(nowRows - mRows) * 5L > math.max(nowRows, mRows))
-            throw new IllegalStateException(
-              s"fusion-recall curve is STALE: store row count drifted > 20% " +
-                s"since measurement ($mRows -> $nowRows) — re-run " +
-                "evalFusionRecall, or pass checkFresh = false")
-        }
-      }
-      val rows = curve
-        .filter(col("recall_x1e4") >= math.ceil(target * 10000).toLong)
-        .agg(min("nprobe")).head()
-      if (rows.isNullAt(0)) numShards else rows.getLong(0).toInt
+                      allowed: Option[DataFrame] = None): Int =
+    fusionCurve.rows.fold(numShards) { t =>
+      val curve = sliceRowsFor(
+        t.filter(fusionMode(topK, shortlist, rrfK, compressed, vecShortlist)),
+        sliceStamp(allowed), "fusion-recall")
+      if (checkFresh) fusionCurve.requireFresh(curve,
+        storeStamps() + ("idx_stamp" -> idx.contentStamp()),
+        "re-run evalFusionRecall, or pass checkFresh = false to knowingly serve on it")
+      graft.Curve.pick(curve, target, numShards)
     }
-  }
+
+  /** The fusion curve's mode key: one parameterization's rows. */
+  private def fusionMode(topK: Int, shortlist: Int, rrfK: Int,
+                         compressed: Boolean, vecShortlist: Int): Column =
+    col("top_k") === topK.toLong && col("shortlist") === shortlist.toLong &&
+      col("rrf_k") === rrfK.toLong && col("compressed") === compressed &&
+      col("vec_shortlist") === (if (compressed) vecShortlist.toLong else 0L)
 
   /** A store-derived fusion query sample — (query_id, terms, qv) for
     * the `nQueries` lowest-id vectors ([[evalRecall]]'s deterministic
@@ -1646,17 +1433,13 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     * Fresh parameterizations are untouched — a no-op call costs the
     * stamp reads. Pass the store's paired TermIndex to cover the
     * fusion table; without it, stale fusion parameterizations are
-    * counted in `fusionSkipped` rather than silently dropped.
+    * counted in `fusionSkipped` rather than silently dropped. A table
+    * written in an older layout holds no curve and is not re-measured.
+    * Ends by deleting persisted slice-id sets no curve row references.
     */
   def maintainCurves(idx: Option[graft.text.TermIndex] = None,
                      bootstrapFusion: Boolean = false): CurveMaintenance = {
-    val cents = centroids()
-    val nowStamp = centStamp(cents)
-    val nowRows = spark.read.parquet(vecDir).count()
-    def drifted(mRows: Long): Boolean =
-      math.abs(nowRows - mRows) * 5L > math.max(nowRows, mRows)
-    def staleStore(mStamp: Long, mRows: Long): Boolean =
-      mStamp != nowStamp || drifted(mRows)
+    val now = storeStamps()
     val hc = spark.sparkContext.hadoopConfiguration
     def exists(dir: String): Boolean = {
       val p = new org.apache.hadoop.fs.Path(dir)
@@ -1665,141 +1448,78 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
 
     // slice curves re-measure from the id set the evals persisted
     // alongside them, keyed by the row's OWN allowed_stamp (each
-    // family/mode may hold a different slice); a slice row whose ids
-    // were never persisted is unrecoverable here (left in place — its
-    // nprobeFor refuses on the stale stamp loudly, never a silent
-    // mis-tune). Pinned eagerly: a slice re-measure OVERWRITES the
-    // stamp directory this frame reads, so an unpinned lazy read would
-    // lose its files mid-pass.
+    // family/mode may hold a different slice): Some(allowed) is the
+    // eval's argument, None a slice row whose ids were never persisted
+    // — unrecoverable here, so left in place (its nprobeFor refuses on
+    // the stale stamp loudly, never a silent mis-tune). Pinned eagerly:
+    // a slice re-measure OVERWRITES the stamp directory this frame
+    // reads, so an unpinned lazy read would lose its files mid-pass.
     val sliceIdsCache =
       scala.collection.mutable.Map.empty[Long, Option[DataFrame]]
-    def sliceIdsFor(stamp: Long): Option[DataFrame] =
-      sliceIdsCache.getOrElseUpdate(stamp, {
-        val d = s"$sliceIdsDir/stamp=$stamp"
-        if (exists(d)) Some(spark.read.parquet(d).localCheckpoint(true))
-        else None
-      })
-    def sliceArg(m: org.apache.spark.sql.Row): (Boolean, Option[DataFrame]) = {
-      val st = m.getAs[Long]("allowed_stamp")
-      (st != 0L, if (st != 0L) sliceIdsFor(st) else None)
-    }
+    def sliceArg(m: org.apache.spark.sql.Row): Option[Option[DataFrame]] =
+      m.getAs[Long]("allowed_stamp") match {
+        case 0L => Some(None)
+        case st => sliceIdsCache.getOrElseUpdate(st, {
+          val d = s"$sliceIdsDir/stamp=$st"
+          if (exists(d)) Some(spark.read.parquet(d).localCheckpoint(true))
+          else None
+        }).map(Some(_))
+      }
     try {
-
-    var nRecall = 0
-    if (exists(recallDir)) {
-      val t = spark.read.parquet(recallDir)
-      // pre-stamp tables have unknowable provenance and pre-metric
-      // rows are cosine — same reading as nprobeFor's
-      if (t.columns.contains("cent_stamp")) {
-        val tm =
-          if (t.columns.contains("metric")) t
-          else t.withColumn("metric",
-            lit(graft.plans.ShardTopKJoin.Metric.Cosine))
-        val ts = withSliceStampCol(tm)
-        val modes = ts.select("metric", "compressed", "shortlist", "top_k",
-            "n_queries", "cent_stamp", "n_rows", "allowed_stamp")
-          .distinct().collect()
-        // a compressed re-measure also re-measures its raw twin (one
-        // exact-arm pass feeds both) — do compressed modes first and
-        // skip raw modes evalRecall already replaced
-        val (comp, rawm) = modes.partition(_.getAs[Boolean]("compressed"))
-        comp.foreach { m =>
-          val (isSlice, a) = sliceArg(m)
-          if (staleStore(m.getAs[Long]("cent_stamp"), m.getAs[Long]("n_rows")) &&
-              (!isSlice || a.isDefined)) {
-            evalRecall(m.getAs[Long]("n_queries").toInt,
-              m.getAs[Long]("top_k").toInt, compressed = true,
-              shortlist = m.getAs[Long]("shortlist").toInt,
-              metric = m.getAs[String]("metric"), allowed = a)
-            nRecall += 1
-          }
-        }
-        val coveredRaw = comp.map(m =>
-          (m.getAs[String]("metric"), m.getAs[Long]("top_k"),
-            m.getAs[Long]("n_queries"), m.getAs[Long]("allowed_stamp") != 0L))
-          .toSet
-        rawm.foreach { m =>
-          val key = (m.getAs[String]("metric"), m.getAs[Long]("top_k"),
-            m.getAs[Long]("n_queries"), m.getAs[Long]("allowed_stamp") != 0L)
-          val (isSlice, a) = sliceArg(m)
-          if (!coveredRaw.contains(key) &&
-              staleStore(m.getAs[Long]("cent_stamp"), m.getAs[Long]("n_rows")) &&
-              (!isSlice || a.isDefined)) {
-            evalRecall(m.getAs[Long]("n_queries").toInt,
-              m.getAs[Long]("top_k").toInt,
-              metric = m.getAs[String]("metric"), allowed = a)
-            nRecall += 1
-          }
+      // a compressed re-measure also re-measures its raw twin (one
+      // exact-arm pass feeds both) — do compressed modes first and
+      // skip raw modes evalRecall already replaced
+      val (comp, raw) = recallCurve.stale(now).partition(_.getAs[Boolean]("compressed"))
+      def twin(m: org.apache.spark.sql.Row) =
+        (m.getAs[String]("metric"), m.getAs[Long]("top_k"),
+          m.getAs[Long]("n_queries"), m.getAs[Long]("allowed_stamp") != 0L)
+      val covered = comp.map(twin).toSet
+      val nRecall = (comp ++ raw.filterNot(m => covered(twin(m)))).count { m =>
+        sliceArg(m).exists { a =>
+          evalRecall(m.getAs[Long]("n_queries").toInt, m.getAs[Long]("top_k").toInt,
+            compressed = m.getAs[Boolean]("compressed"),
+            shortlist = m.getAs[Long]("shortlist").toInt,
+            metric = m.getAs[String]("metric"), allowed = a)
+          true
         }
       }
-    }
 
-    var nRange = 0
-    if (exists(rangeRecallDir)) {
-      val t = spark.read.parquet(rangeRecallDir)
-      if (t.columns.contains("cent_stamp")) {
-        val ts = withSliceStampCol(t)
-        ts.select("min_score_x1e6", "n_queries", "cent_stamp", "n_rows",
-            "allowed_stamp")
-          .distinct().collect()
-          .foreach { m =>
-            val (isSlice, a) = sliceArg(m)
-            if (staleStore(m.getAs[Long]("cent_stamp"), m.getAs[Long]("n_rows")) &&
-                (!isSlice || a.isDefined)) {
-              evalRangeRecall(m.getAs[Long]("min_score_x1e6") / 1e6,
-                m.getAs[Long]("n_queries").toInt, allowed = a)
-              nRange += 1
-            }
-          }
-      }
-    }
+      val nRange = rangeCurve.stale(now).count(m => sliceArg(m).exists { a =>
+        evalRangeRecall(m.getAs[Long]("min_score_x1e6") / 1e6,
+          m.getAs[Long]("n_queries").toInt, allowed = a)
+        true
+      })
 
-    var nFusion = 0
-    var nFusionSkipped = 0
-    if (!exists(fusionRecallDir) && bootstrapFusion) {
-      // bootstrap (opt-in): a store that never measured a fusion
-      // curve gets one from its own docs — default parameters, the
-      // store-derived sample ([[fusionSampleFrom]])
-      idx match {
-        case Some(i) =>
-          evalFusionRecall(i, fusionSampleFrom(i))
-          nFusion += 1
-        case None => nFusionSkipped += 1
-      }
-    }
-    if (exists(fusionRecallDir) && nFusion == 0) {
-      val t = spark.read.parquet(fusionRecallDir)
-      val ts = withSliceStampCol(t)
-      val sampleOk = exists(fusionQueriesDir)
-      ts.select("top_k", "shortlist", "rrf_k", "compressed", "vec_shortlist",
-          "cent_stamp", "idx_stamp", "n_rows", "allowed_stamp")
-        .distinct().collect()
-        .foreach { m =>
-          val idxMoved = idx.exists(_.contentStamp() != m.getAs[Long]("idx_stamp"))
-          val (isSlice, a) = sliceArg(m)
-          // slice rows stamp the UNFILTERED store count too (the
-          // slice's identity is allowed_stamp), so one staleStore
-          // covers both
-          val stale =
-            staleStore(m.getAs[Long]("cent_stamp"), m.getAs[Long]("n_rows"))
-          if (stale || idxMoved) {
-            (idx, sampleOk, !isSlice || a.isDefined) match {
-              case (Some(i), true, true) =>
-                evalFusionRecall(i, spark.read.parquet(fusionQueriesDir),
-                  topK = m.getAs[Long]("top_k").toInt,
-                  shortlist = m.getAs[Long]("shortlist").toInt,
-                  rrfK = m.getAs[Long]("rrf_k").toInt,
-                  compressed = m.getAs[Boolean]("compressed"),
-                  vecShortlist = math.max(
-                    m.getAs[Long]("vec_shortlist").toInt, 1),
-                  allowed = a)
-                nFusion += 1
-              case _ => nFusionSkipped += 1
-            }
-          }
+      // without the TermIndex only the store stamps are compared; a
+      // stale parameterization that cannot be re-measured (no index,
+      // no persisted query sample, or lost slice ids) is counted in
+      // `fusionSkipped`
+      val (nFusion, nFusionSkipped) =
+        if (fusionCurve.rows.isEmpty && bootstrapFusion)
+          // bootstrap (opt-in): a store that never measured a fusion
+          // curve gets one from its own docs — default parameters, the
+          // store-derived sample ([[fusionSampleFrom]])
+          idx.fold((0, 1)) { i => evalFusionRecall(i, fusionSampleFrom(i)); (1, 0) }
+        else {
+          val stale = fusionCurve.stale(
+            now ++ idx.map(i => "idx_stamp" -> i.contentStamp()))
+          val sampleOk = exists(fusionQueriesDir)
+          val done = stale.count(m => (idx, sliceArg(m)) match {
+            case (Some(i), Some(a)) if sampleOk =>
+              evalFusionRecall(i, spark.read.parquet(fusionQueriesDir),
+                topK = m.getAs[Long]("top_k").toInt,
+                shortlist = m.getAs[Long]("shortlist").toInt,
+                rrfK = m.getAs[Long]("rrf_k").toInt,
+                compressed = m.getAs[Boolean]("compressed"),
+                vecShortlist = math.max(m.getAs[Long]("vec_shortlist").toInt, 1),
+                allowed = a)
+              true
+            case _ => false
+          })
+          (done, stale.length - done)
         }
-    }
-    CurveMaintenance(nRecall, nRange, nFusion, nFusionSkipped)
+      dropUnusedSliceIds()
+      CurveMaintenance(nRecall, nRange, nFusion, nFusionSkipped)
     } finally sliceIdsCache.values.flatten.foreach(
       org.apache.spark.sql.graftshim.CheckpointInterop.unpersistCheckpoint)
   }

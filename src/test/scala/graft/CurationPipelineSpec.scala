@@ -93,14 +93,24 @@ class CurationPipelineSpec extends AnyFunSuite {
     // Spark 4 additionally reports planning-only "rdd" events.
     val accounting = Set("head", "count", "collect", "collectAsList",
       "collectToPython", "take", "first", "show", "toPandas")
+    // the listener bus is asynchronous and delivers in order: once a
+    // sentinel action's own event arrives, no earlier case's action
+    // can still reach this listener and be counted
+    val sentinel = spark.range(1).toDF()
+    val drained = new java.util.concurrent.CountDownLatch(1)
     val l = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (accounting.contains(funcName)) actions.incrementAndGet()
+        if (qe eq sentinel.queryExecution) drained.countDown()
+        else if (accounting.contains(funcName)) actions.incrementAndGet()
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
         if (accounting.contains(funcName)) actions.incrementAndGet()
     }
     spark.listenerManager.register(l)
     try {
+      sentinel.collect()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the sentinel action's event never arrived")
+      actions.set(0)
       val docs = Tables.documents(spark, sf)
       val bench = docs.filter(col("doc_id") === 7).select("doc_id", "text")
       CurationPipeline.curate(spark, docs, benchmark = Some(bench))

@@ -2012,15 +2012,17 @@ class VectorSpec extends AnyFunSuite {
         .as("vector")))
     val e2 = intercept[IllegalStateException](vs.nprobeFor(0.5))
     assert(e2.getMessage.contains("drifted"), e2.getMessage)
-    // the maintenance verb: refreshRecall re-measures ONLY stale modes
+    // the maintenance verb: maintainCurves re-measures ONLY stale modes
     // (here the one raw mode) and the refusal clears; a second call is
     // a fresh-curve no-op
-    assert(vs.refreshRecall(), "a stale mode must trigger a re-measurement")
+    assert(vs.maintainCurves().recallRefreshed > 0,
+      "a stale mode must trigger a re-measurement")
     assert(vs.nprobeFor(0.5) >= 1, "refresh heals the drift refusal")
-    assert(!vs.refreshRecall(), "an all-fresh curve must refresh nothing")
+    assert(vs.maintainCurves().recallRefreshed === 0,
+      "an all-fresh curve must refresh nothing")
   }
 
-  test("refreshRecall re-measures compressed modes at their own parameters") {
+  test("maintainCurves re-measures compressed recall modes at their own parameters") {
     val corpus = spark.range(0, 512, 1, 8).select(col("id"),
       array((0 until 32).map(d =>
         (pmod(hash(col("id"), lit(d)), lit(101)).cast("double") - 50.0) / 50.0): _*)
@@ -2029,14 +2031,15 @@ class VectorSpec extends AnyFunSuite {
     val vs = new VectorStore(spark, dir, numShards = 4)
     vs.build(corpus, iters = 2, pqSubspaces = 16, pqCodes = 16)
     vs.evalRecall(nQueries = 16, topK = 5, compressed = true, shortlist = 24)
-    assert(!vs.refreshRecall(), "freshly measured modes must not re-run")
+    assert(vs.maintainCurves().recallRefreshed === 0,
+      "freshly measured modes must not re-run")
     // rebuild: routing changes, BOTH persisted modes go stale
     vs.build(corpus.withColumn("vector",
       transform(col("vector"), x => x * 2.0 + 1.0)), iters = 2,
       pqSubspaces = 16, pqCodes = 16)
     intercept[IllegalStateException](vs.nprobeFor(0.5, compressed = true,
       shortlist = 24))
-    assert(vs.refreshRecall())
+    assert(vs.maintainCurves().recallRefreshed > 0)
     // both modes serve again, and the compressed mode kept ITS
     // shortlist parameter through the refresh
     assert(vs.nprobeFor(0.5) >= 1)

@@ -32,7 +32,7 @@ final class Curve(spark: SparkSession, dir: String, family: String,
     */
   def rows: Option[DataFrame] =
     if (!fs.exists(new Path(dir))) None
-    else Some(spark.read.parquet(dir))
+    else Some(Tables.resolved(spark, dir))
       .filter(t => (keys ++ stampCols).forall(t.columns.contains))
 
   /** Persist `fresh`, keeping the existing rows outside `replaced`.
@@ -44,7 +44,7 @@ final class Curve(spark: SparkSession, dir: String, family: String,
       .localCheckpoint(true)
     try all.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir)
     finally CheckpointInterop.unpersistCheckpoint(all)
-    spark.read.parquet(dir)
+    Tables.resolved(spark, dir)
   }
 
   /** Delete the table (a rebuild of the measured corpus). */

@@ -109,7 +109,7 @@ object ScaleSmoke {
     // on id-pushdown row-group pruning over the id-sorted layout.
     val model2 = vsPq.pqModel().get
     val probe2 = graft.vector.Centroids.nearestShardsOf(q, vsPq.centroids(), 2).map(_.toLong)
-    val probedScan = spark.read.parquet(s"$dirPq/vectors")
+    val probedScan = Tables.resolved(spark, s"$dirPq/vectors")
       .filter(col("shard").isin(probe2: _*))
     val qn = math.sqrt(q.map(x => x * x).sum)
     // the store is residual-coded (the default), so the approximate
@@ -181,7 +181,7 @@ object ScaleSmoke {
       .select(col("id").as("query_id"), col("vector").as("qv"))
       .withColumn("shard", explode(graft.vector.Centroids.nearestShards(
         col("qv"), vsPq.centroids().toSeq, nprobe = 2)))
-    val corpusS = spark.read.parquet(s"$dirPq/vectors")
+    val corpusS = Tables.resolved(spark, s"$dirPq/vectors")
       .select(col("shard").cast("long").as("shard"), col("id"), col("vector"))
     val balance = corpusS.groupBy("shard").count()
       .agg(min("count"), max("count")).head()
@@ -470,7 +470,7 @@ object ScaleSmoke {
     val touchedAll = timed(s"upsert $nUp vectors spread over all shards (worst case)") {
       vs.upsert(upserts)
     }
-    val oneShardIds = spark.read.parquet(s"$dir/vectors")
+    val oneShardIds = Tables.resolved(spark, s"$dir/vectors")
       .filter(col("shard") === 0).select("id").limit(2000)
     val localUpserts = vecs.join(oneShardIds, "id")
       .select(col("id"), transform(col("vector"), x => x * 1.0001).as("vector"))

@@ -45,7 +45,7 @@ object ScaleSmoke10x {
           array((0 until 64).map(i => rand(seed = 3000 + i) - 0.5): _*).as("vector"))
         .write.parquet(s"$dir/raw")
     }
-    val vecs = spark.read.parquet(s"$dir/raw")
+    val vecs = Tables.resolved(spark, s"$dir/raw")
 
     val vs = new VectorStore(spark, s"$dir/store", numShards = 32)
     timed(s"ivf build ($nVec vectors, 32 shards, 2 iters)") {
@@ -140,7 +140,7 @@ object ScaleSmoke10x {
     // REWRITE AMPLIFICATION an operator actually budgets at 10M rows:
     // each verb reports the shard directories it rewrote, and the wall
     // time is dominated by rewriting exactly those directories.
-    val n0 = spark.read.parquet(s"$dir/store/vectors").count()
+    val n0 = Tables.resolved(spark, s"$dir/store/vectors").count()
     val upBatch = spark.range(nVec - 100000, nVec + 50000, 1, 16)
       .select(col("id"),
         array((0 until 64).map(i => rand(seed = 6000 + i) - 0.5): _*).as("vector"))
@@ -150,13 +150,13 @@ object ScaleSmoke10x {
     println(s"[scale10x] upsert touched ${upTouched.length}/32 shards — a " +
       "randomly-routed 1.5% batch reaches every shard (IVF routing is " +
       "content-addressed); amplification is bounded by batch SPREAD, not size")
-    val n1 = spark.read.parquet(s"$dir/store/vectors").count()
+    val n1 = Tables.resolved(spark, s"$dir/store/vectors").count()
     require(n1 == n0 + 50000, s"upsert count drift: $n0 -> $n1")
 
     val delIds: Seq[Any] = (0 until 1000).map(i => (nVec + i).toLong)
     val delTouched = timed("delete 1k ids") { vs.delete(delIds) }
     println(s"[scale10x] delete touched ${delTouched.length}/32 shards")
-    require(spark.read.parquet(s"$dir/store/vectors").count() == n1 - 1000,
+    require(Tables.resolved(spark, s"$dir/store/vectors").count() == n1 - 1000,
       "delete count drift")
 
     val (rcTouched, rcMoved) = timed("refreshCentroids(sample 5%, 2 iters)") {
@@ -199,7 +199,7 @@ object ScaleSmoke10x {
             .as("text"))
         .write.parquet(s"$dir/docs")
     }
-    val docs = spark.read.parquet(s"$dir/docs")
+    val docs = Tables.resolved(spark, s"$dir/docs")
     val pairsDir = s"$dir/servedpairs"
     val nCand = timed(s"ServedPairs COLD build ($nDocs docs: stamp + " +
         "shingle/df-cap/self-join candidate write + publish)") {

@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the test corpus (TPC-H-ish star schema + events stream
-  * table + documents/embeddings for the vector & LLM-pipeline ops).
+  * table + documents/embeddings for the vector & LLM-pipeline ops),
+  * and [[resolved]], the one parquet read path of the program.
   *
   * All reads are plain parquet scans: column pruning and predicate
   * pushdown are left to Catalyst — callers `select`/`filter` and the
@@ -11,7 +14,116 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    resolved(spark, s"$dir/$name.parquet")
+
+  /** The parquet table at `dir`, with no Spark job when it is warm.
+    *
+    * The schema is cached per session, keyed by the qualified path
+    * and checked against a driver-side [[listing]] of every file's
+    * path, size and mtime. While the listing is unchanged the frame is
+    * rebuilt from the cached schema (`spark.read.schema(s)`), which
+    * skips schema inference; Spark still lists the files itself, so
+    * the rows are always current. Any append, upsert, delete,
+    * compaction or write by another process changes the listing,
+    * which re-infers and replaces the entry. An absent directory is
+    * read uncached, so it fails exactly as `spark.read.parquet` does.
+    */
+  def resolved(spark: SparkSession, dir: String): DataFrame =
+    listing(spark, dir) match {
+      case None => spark.read.parquet(dir)
+      case Some(l) =>
+        val key = "schema " + qualified(spark, dir)
+        val m = entries(spark)
+        m.get(key) match {
+          case Entry(Seq(Some(`l`)), s: StructType) => spark.read.schema(s).parquet(dir)
+          case _ =>
+            val df = spark.read.parquet(dir)
+            m.put(key, Entry(Seq(Some(l)), df.schema))
+            df
+        }
+    }
+
+  /** A small driver-side value derived from `dirs` (centroids,
+    * codebooks, an index's statistics), cached under `name` against
+    * the same listings [[resolved]] checks: `compute` runs when any of
+    * the directories changed (or appeared, or went) since it last ran,
+    * and is reused otherwise. A mutable result must be copied by the
+    * caller before it leaves the owner.
+    */
+  private[graft] def fold[T](spark: SparkSession, name: String, dirs: String*)
+                            (compute: => T): T = {
+    val ls = dirs.map(listing(spark, _))
+    val key = name + " " + dirs.map(qualified(spark, _)).mkString(" ")
+    val m = entries(spark)
+    val hit = m.get(key)
+    if (hit != null && hit.listings == ls) hit.value.asInstanceOf[T]
+    else {
+      val v = compute
+      m.put(key, Entry(ls, v))
+      v
+    }
+  }
+
+  /** A 64-bit stamp of the listings of `dirs`: it moves whenever a
+    * file under any of them is added, removed, rewritten or resized,
+    * so equal stamps mean the directories hold the same files.
+    */
+  private[graft] def stamp(spark: SparkSession, dirs: String*): Long = {
+    val text = dirs.map(d => listing(spark, d).fold("absent")(
+      _.map { case (p, n, t) => s"$p $n $t" }.mkString("\n"))).mkString("\u0000")
+    import scala.util.hashing.MurmurHash3.stringHash
+    (stringHash(text, 0x3c074a61).toLong << 32) | (stringHash(text, 0x5bd1e995) & 0xffffffffL)
+  }
+
+  private[graft] type Listing = Vector[(String, Long, Long)]
+
+  /** Every file under `dir` as (path relative to it, size, mtime),
+    * sorted; None when `dir` is absent. `_`- and `.`-prefixed
+    * directories are skipped, as Spark's own listing skips them, and
+    * so are `.`-prefixed files (checksums). The walk uses
+    * `FileSystem.listStatus` only: on the local file system
+    * `listFiles` and `LocatedFileStatus` load each file's permissions
+    * by forking a process, which costs more than the schema inference
+    * the cache saves.
+    */
+  private[graft] def listing(spark: SparkSession, dir: String): Option[Listing] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = Vector.newBuilder[(String, Long, Long)]
+    def walk(d: Path, rel: String): Unit = fs.listStatus(d).foreach { st =>
+      val n = st.getPath.getName
+      if (st.isDirectory) {
+        if (!n.startsWith("_") && !n.startsWith(".")) walk(st.getPath, rel + n + "/")
+      } else if (!n.startsWith("."))
+        out += ((rel + n, st.getLen, st.getModificationTime))
+    }
+    try { walk(root, ""); Some(out.result().sortBy(_._1)) }
+    catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  private def qualified(spark: SparkSession, dir: String): String = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
+  }
+
+  /** What one cache key resolved, against the listings of its
+    * directories at the time.
+    */
+  private final case class Entry(listings: Seq[Option[Listing]], value: Any)
+
+  /** Per session, the most recently used 1024 keys. */
+  private val sessions =
+    new java.util.WeakHashMap[SparkSession, java.util.Map[String, Entry]]()
+
+  private def entries(spark: SparkSession): java.util.Map[String, Entry] =
+    sessions.synchronized {
+      sessions.computeIfAbsent(spark, _ =>
+        java.util.Collections.synchronizedMap(
+          new java.util.LinkedHashMap[String, Entry](16, 0.75f, true) {
+            override def removeEldestEntry(
+                e: java.util.Map.Entry[String, Entry]): Boolean = size() > 1024
+          }))
+    }
 
   /** Fan a scan across cores BEFORE heavy per-row work when the source
     * layout cannot: the test parquet ships one row group per table, so

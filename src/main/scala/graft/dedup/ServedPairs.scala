@@ -83,13 +83,13 @@ object ServedPairs {
       // counted from the WRITTEN artifact (one scan of the
       // dup-volume-sized frame), so they can never disagree with what
       // readers will see
-      s.read.parquet(s"$dir/cands")
+      Tables.resolved(s, s"$dir/cands")
         .agg(count(lit(1)).as("n_candidates"),
           coalesce(sum(when(jacCol >= 0.8, 1L).otherwise(0L)), lit(0L))
             .as("n_pairs_default"))
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/counts")
     }
-    s.read.parquet(s"$dir/cands")
+    Tables.resolved(s, s"$dir/cands")
   }
 
   /** Verified Jaccard pairs (id_a, id_b, jaccard) at `threshold` from
@@ -106,5 +106,5 @@ object ServedPairs {
     */
   private[graft] def pairsWithCount(s: SparkSession, d: String): (DataFrame, Long) =
     (pairs(s, d),
-      s.read.parquet(s"${pairsDir(d)}/counts").head().getAs[Long]("n_pairs_default"))
+      Tables.resolved(s, s"${pairsDir(d)}/counts").head().getAs[Long]("n_pairs_default"))
 }

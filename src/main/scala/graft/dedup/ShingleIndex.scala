@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
+import graft.Tables.resolved
+
 /** The maintained incremental shingle index that
   * [[Dedup.incrementalVerdicts]]'s Scaladoc promises: the corpus-side
   * tables a continuously-fed dedup gate probes, PERSISTED once and
@@ -34,8 +36,8 @@ import org.apache.spark.sql.types.DoubleType
   *                            measured curve in `bandcurve/`)
   *  - `del/`    (doc_id)      tombstones: docs [[delete]]d but not yet
   *                            physically reclaimed; row-set reads
-  *                            anti-join them, [[compact]] applies and
-  *                            clears them
+  *                            filter them out (a literal id set),
+  *                            [[compact]] applies and clears them
   * [[compact]] folds EVERY per-batch table (delta tables by summing,
   * row-set tables by rewrite — minus tombstones — and del/ to empty).
   *
@@ -103,22 +105,11 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
 
   private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Tombstoned doc_ids, or None when nothing was ever deleted (a
-    * legacy index has no del/ — treated as empty, the delete layout is
-    * additive).
-    */
-  private def tombstones(excludeLabel: Option[String]): Option[DataFrame] =
-    if (!fs.exists(new Path(delDir))) None
-    else Some(graft.sources.BatchedTable.readIdx(spark, delDir, excludeLabel)
-      .select("doc_id"))
+  private def tombstones(excludeLabel: Option[String]): Seq[Long] =
+    graft.sources.BatchedTable.tombstoneIds(spark, delDir, excludeLabel)
 
-  /** Anti-join a (doc_id, ...) row-set read against the tombstones.
-    * Broadcast by contract: tombstone sets are takedown-request-sized
-    * (a corpus-scale purge is a rebuild, not a delete).
-    */
   private[dedup] def minusDeleted(df: DataFrame, excludeLabel: Option[String]): DataFrame =
-    tombstones(excludeLabel).fold(df)(t =>
-      df.join(broadcast(t), Seq("doc_id"), "left_anti"))
+    graft.sources.BatchedTable.minusDeleted(spark, delDir, df, excludeLabel)
 
   private def fpOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), md5(col("text")).as("fp"))
@@ -130,16 +121,26 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
   private def dfNow(excludeLabel: Option[String] = None): DataFrame =
     readIdx(dfDir, excludeLabel).groupBy("s").agg(sum("df").as("df"))
 
-  /** Indexed-corpus doc count, folded from the per-batch meta rows —
-    * one row per batch, so this never scans fp/ row data ([[append]]
-    * and [[judge]] call it per invocation; at thousands of batches an
-    * fp count would be the dominant fixed cost).
+  /** The per-batch (label, n_docs, n_shingles) meta rows outside
+    * `excludeLabel`, collected once per listing of meta/
+    * ([[graft.Tables.fold]]) — one row per batch, so the folds below
+    * never scan fp/ or sh/ row data.
     */
-  private[graft] def nDocs(excludeLabel: Option[String] = None): Long = {
+  private def metaRows(excludeLabel: Option[String]): Array[(String, Long, Long)] = {
     requireDir(metaDir, "meta/ table")
-    readIdx(metaDir, excludeLabel)
-      .agg(coalesce(sum("n_docs"), lit(0L))).head().getLong(0)
+    graft.Tables.fold(spark, "shingle-meta", metaDir) {
+      readIdx(metaDir, None)
+        .select(col("batch").cast("string"), col("n_docs"), col("n_shingles")).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    }.filterNot(r => excludeLabel.contains(r._1))
   }
+
+  /** Indexed-corpus doc count, folded from the per-batch meta rows
+    * ([[append]] and [[judge]] call it per invocation; at thousands of
+    * batches an fp count would be the dominant fixed cost).
+    */
+  private[graft] def nDocs(excludeLabel: Option[String] = None): Long =
+    metaRows(excludeLabel).map(_._2).sum
 
   /** Loud, actionable failure for an index directory persisted by a
     * layout version that predates `dir` — the alternative is a bare
@@ -182,12 +183,12 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
     val cap = math.max(dfCapFloor, math.ceil(n * maxDfFraction).toLong)
     val capped = sh.join(dfNow().filter(col("df") <= cap).select("s"), "s")
     writeBatch(capped, shDir, "base")
-    writeBatch(spark.read.parquet(shDir).groupBy("doc_id").agg(count(lit(1)).as("n")),
+    writeBatch(resolved(spark, shDir).groupBy("doc_id").agg(count(lit(1)).as("n")),
       szDir, "base")
     writeBatch(fpOf(corpus), fpDir, "base")
-    writeBatch(Dedup.bandKeys(spark.read.parquet(s"$shDir/batch=base")), bandDir, "base")
+    writeBatch(Dedup.bandKeys(resolved(spark, s"$shDir/batch=base")), bandDir, "base")
     // meta last: it describes a fully-written batch directory set
-    writeMeta("base", n, spark.read.parquet(s"$shDir/batch=base").count())
+    writeMeta("base", n, resolved(spark, s"$shDir/batch=base").count())
     sh.unpersist()
   }
 
@@ -209,8 +210,9 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
       s"label '$label' was used by a delete — labels are unique across mutations")
     // a tombstoned id's new copy would be silently hidden by its own
     // tombstone — refuse until a compact() reclaims the delete
-    tombstones(None).foreach { t =>
-      val clash = batch.select("doc_id").join(broadcast(t), "doc_id").limit(1).count()
+    val tombs = tombstones(None)
+    if (tombs.nonEmpty) {
+      val clash = batch.filter(col("doc_id").isin(tombs: _*)).limit(1).count()
       require(clash == 0,
         "append: batch contains tombstoned doc_ids — run reclaim(<delete label>) " +
           "(or a full compact()) before re-ingesting a deleted id")
@@ -346,7 +348,7 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
     // them as a Seq): the literal isin() pushes into each row-set scan
     // for the affected-batch discovery, where a broadcast join would
     // read every row with no pushdown
-    val ids = spark.read.parquet(delPart.toString).select("doc_id")
+    val ids = resolved(spark, delPart.toString).select("doc_id")
       .collect().map(_.getLong(0)).toSeq
     val n = ids.size.toLong
     if (n > 0) rowSet.foreach { dir =>
@@ -356,7 +358,7 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
         .collect().map(_.getString(0))
       affected.foreach { b =>
         graft.sources.BatchedTable.rewriteBatch(fs, dir, b,
-          spark.read.parquet(s"$dir/batch=$b")
+          resolved(spark, s"$dir/batch=$b")
             .filter(!col("doc_id").isin(ids: _*)))
       }
     }
@@ -419,12 +421,9 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
       // health() permanently undercounting after delete + recap.
       val hotRows = readIdx(shDir, None)
         .join(broadcast(hot), Seq("s"), "left_semi")
-      val marked = tombstones(None) match {
-        case Some(t) => hotRows.join(
-          broadcast(t.select("doc_id").distinct().withColumn("__t", lit(1))),
-          Seq("doc_id"), "left")
-        case None => hotRows.withColumn("__t", lit(null).cast("int"))
-      }
+      val tombs = tombstones(None)
+      val marked = hotRows.withColumn("__t",
+        if (tombs.isEmpty) lit(null).cast("int") else when(col("doc_id").isin(tombs: _*), 1))
       val bandingNow = currentBanding()
       val perBatch = marked
         .groupBy(col("batch").cast("string").as("b"))
@@ -432,17 +431,17 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
           sum(when(col("__t").isNull, 1L).otherwise(0L)).as("nLive"))
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       perBatch.foreach { case (b, _, liveB) =>
-        val kept = spark.read.parquet(s"$shDir/batch=$b")
+        val kept = resolved(spark, s"$shDir/batch=$b")
           .join(broadcast(hot), Seq("s"), "left_anti")
         graft.sources.BatchedTable.rewriteBatch(fs, shDir, b, kept)
         // recount from the REWRITTEN partition (kept's plan read the
         // pre-rewrite files, which the swap just replaced)
-        val recapped = spark.read.parquet(s"$shDir/batch=$b")
+        val recapped = resolved(spark, s"$shDir/batch=$b")
         graft.sources.BatchedTable.rewriteBatch(fs, szDir, b,
           recapped.groupBy("doc_id").agg(count(lit(1)).as("n")))
         graft.sources.BatchedTable.rewriteBatch(fs, bandDir, b,
           Dedup.bandKeysAt(recapped, bandingNow))
-        val m = spark.read.parquet(s"$metaDir/batch=$b")
+        val m = resolved(spark, s"$metaDir/batch=$b")
         graft.sources.BatchedTable.rewriteBatch(fs, metaDir, b,
           m.select(col("n_docs"), (col("n_shingles") - liveB).as("n_shingles")))
       }
@@ -465,11 +464,12 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
     graft.sources.BatchedTable.recoverDirSwap(fs, cfgDir)
     if (!fs.exists(new Path(cfgDir))) derivedBanding()
     else
-      try spark.read.parquet(cfgDir).head().getInt(0)
+      try graft.Tables.fold(spark, "banding", cfgDir)(resolved(spark, cfgDir).head().getInt(0))
       catch { case scala.util.control.NonFatal(_) => derivedBanding() }
   }
 
-  private def derivedBanding(): Int =
+  /** The bands/ table's own banding, folded once per its listing. */
+  private def derivedBanding(): Int = graft.Tables.fold(spark, "derived-banding", bandDir) {
     if (!fs.exists(new Path(bandDir))) Dedup.Bands
     else {
       // derive from the MOST RECENTLY WRITTEN batch only, not a
@@ -487,7 +487,7 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
       else {
         val latest = batches
           .maxBy(st => (st.getModificationTime, st.getPath.getName)).getPath
-        val m = spark.read.parquet(latest.toString)
+        val m = resolved(spark, latest.toString)
           .agg(max(col("band"))).head()
         if (m.isNullAt(0)) {
           // empty newest batch (all rows tombstoned out at rewrite):
@@ -497,6 +497,7 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
         } else m.getInt(0) + 1
       }
     }
+  }
 
   /** (live docs, live shingle rows) from the meta fold — the
     * provenance stamps the measured banding curve carries. Append and
@@ -505,11 +506,8 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
     * banding on the same corpus, valid across rebandings).
     */
   private def metaStamp(): Map[String, Long] = {
-    requireDir(metaDir, "meta/ table")
-    val r = readIdx(metaDir, None)
-      .agg(coalesce(sum("n_docs"), lit(0L)),
-        coalesce(sum("n_shingles"), lit(0L))).head()
-    Map("stamp_docs" -> r.getLong(0), "stamp_shingles" -> r.getLong(1))
+    val m = metaRows(None)
+    Map("stamp_docs" -> m.map(_._2).sum, "stamp_shingles" -> m.map(_._3).sum)
   }
 
   /** MEASURED banding recall over the index's OWN universe: candidate
@@ -661,7 +659,7 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
       .map(_.stripPrefix("batch="))
     batches.foreach { b =>
       graft.sources.BatchedTable.rewriteBatch(fs, bandDir, b,
-        Dedup.bandKeysAt(spark.read.parquet(s"$shDir/batch=$b"), bands))
+        Dedup.bandKeysAt(resolved(spark, s"$shDir/batch=$b"), bands))
     }
     batches.size.toLong
   }
@@ -832,15 +830,12 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
     requireDir(dfDir, "dfc/ table")
     val batches = fs.listStatus(new Path(dfDir))
       .map(_.getPath.getName).count(_.startsWith("batch="))
-    requireDir(metaDir, "meta/ table")
-    val m = readIdx(metaDir, None)
-      .agg(coalesce(sum("n_docs"), lit(0L)),
-        coalesce(sum("n_shingles"), lit(0L))).head()
-    val tomb = tombstones(None).map(_.count()).getOrElse(0L)
+    val m = metaRows(None)
+    val tomb = tombstones(None).size.toLong
     spark.range(1).select(
       lit(batches.toLong).as("n_batches"),
-      lit(m.getLong(0)).as("n_docs"),
-      lit(m.getLong(1)).as("n_shingles"),
+      lit(m.map(_._2).sum).as("n_docs"),
+      lit(m.map(_._3).sum).as("n_shingles"),
       lit(tomb).as("n_tombstones"))
   }
 

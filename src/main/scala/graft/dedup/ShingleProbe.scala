@@ -117,7 +117,7 @@ final class ShingleProbe private[dedup](idx: ShingleIndex,
     require(!foldedLabels.contains(label),
       s"label '$label' already folded into the probe — a replayed append this " +
         "old violates the latest-batch-only delivery contract")
-    def part(dir: String) = idx.spark.read.parquet(s"$dir/batch=$label")
+    def part(dir: String) = graft.Tables.resolved(idx.spark, s"$dir/batch=$label")
     val n = part(idx.metaDir).agg(coalesce(sum("n_docs"), lit(0L)))
       .head().getLong(0)
     deltas(label) = Leg(n,

@@ -697,7 +697,7 @@ object PipelineOps extends QueryModule {
       w.write.mode("overwrite").parquet(s"$dir/weights")
       release()
     }
-    s.read.parquet(s"$dir/weights")
+    Tables.resolved(s, s"$dir/weights")
   }
 
   private def dsirQuery(s: SparkSession, d: String): DataFrame =

@@ -48,8 +48,34 @@ private[graft] object BatchedTable {
     */
   def readIdx(spark: SparkSession, dir: String,
               excludeLabel: Option[String]): DataFrame = {
-    val df = spark.read.parquet(dir)
+    val df = graft.Tables.resolved(spark, dir)
     excludeLabel.fold(df)(l => df.filter(col("batch") =!= l))
+  }
+
+  /** The doc_ids a `del/` tombstone table holds outside `excludeLabel`
+    * — empty when the table is absent (an index from before the delete
+    * layout: the layout is additive). The (label, doc_id) rows are
+    * collected once per listing of the table ([[graft.Tables.fold]]).
+    */
+  def tombstoneIds(spark: SparkSession, delDir: String,
+                   excludeLabel: Option[String]): Seq[Long] =
+    graft.Tables.fold(spark, "tombstones", delDir) {
+      val p = new Path(delDir)
+      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+        Array.empty[(String, Long)]
+      else readIdx(spark, delDir, None)
+        .select(col("batch").cast("string"), col("doc_id")).collect()
+        .map(r => (r.getString(0), r.getLong(1)))
+    }.collect { case (l, id) if !excludeLabel.contains(l) => id }.toSeq
+
+  /** `df` without the docs tombstoned in `delDir`. The ids ride the plan
+    * as a literal set: tombstones are takedown-request-sized, never
+    * corpus-sized (a corpus-scale purge is a rebuild, not a delete).
+    */
+  def minusDeleted(spark: SparkSession, delDir: String, df: DataFrame,
+                   excludeLabel: Option[String]): DataFrame = {
+    val ids = tombstoneIds(spark, delDir, excludeLabel)
+    if (ids.isEmpty) df else df.filter(!col("doc_id").isin(ids: _*))
   }
 
   def tmpFor(dir: String): Path = {
@@ -168,7 +194,7 @@ private[graft] object BatchedTable {
     // partition, byte-equivalent to its pre-compact state — both
     // writes are durable in tmp before the live directory is touched
     keepLabel.foreach { l =>
-      spark.read.parquet(dir).filter(col("batch") === l).drop("batch")
+      graft.Tables.resolved(spark, dir).filter(col("batch") === l).drop("batch")
         .write.mode(SaveMode.Overwrite).parquet(s"$tmp/batch=$l")
     }
     if (!fs.delete(p, true)) throw new IllegalStateException(

@@ -43,7 +43,7 @@ object Compact {
     val bytes = files.map(_.getLen).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     if (files.length <= n) return (files.length, files.length)
-    val compacted0 = spark.read.parquet(dir).coalesce(n)
+    val compacted0 = graft.Tables.resolved(spark, dir).coalesce(n)
     val compacted =
       if (sortCols.isEmpty) compacted0
       else compacted0.sortWithinPartitions(sortCols.map(col): _*)

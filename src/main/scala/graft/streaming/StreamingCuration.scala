@@ -201,7 +201,7 @@ object StreamingCuration {
     val p = new org.apache.hadoop.fs.Path(outDir)
     val accepted =
       if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        spark.read.parquet(outDir).select("doc_id", "text")
+        graft.Tables.resolved(spark, outDir).select("doc_id", "text")
       else {
         import org.apache.spark.sql.types._
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

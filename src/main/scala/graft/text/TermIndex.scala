@@ -31,12 +31,13 @@ import graft.streaming.ServeStream
   *            column pruning leaves it on disk); written term-sorted
   *            so parquet row-group stats prune non-query terms
   *  - `meta/` (n_docs, sum_dl)        one row per batch; N and avgdl
-  *            fold from these at query time. [[delete]] writes
+  *            fold from these on the driver, once per listing of
+  *            meta/, into probe-plan literals. [[delete]] writes
   *            NEGATIVE delta rows here — the sum nets them out with
   *            zero read-path changes
   *  - `del/`  (doc_id)                tombstones: docs [[delete]]d but
-  *            not yet physically reclaimed; reads anti-join them
-  *            (takedown-sized — broadcast), [[compact]] applies them
+  *            not yet physically reclaimed; reads filter them out
+  *            (takedown-sized — a literal id set), [[compact]] applies them
   *            to post/ and clears them
   *
   * Scoring parity: [[search]] reproduces the one-shot query's BM25
@@ -163,21 +164,33 @@ class TermIndex(spark: SparkSession, path: String,
     BatchedTable.writeBatch(m, metaDir, label)
   }
 
-  /** Tombstoned doc_ids, or None when nothing was ever deleted (a
-    * legacy index has no del/ — treated as empty, not an error: the
-    * delete layout is additive).
-    */
-  private def tombstones(excludeLabel: Option[String]): Option[DataFrame] =
-    if (!fs.exists(new Path(delDir))) None
-    else Some(BatchedTable.readIdx(spark, delDir, excludeLabel).select("doc_id"))
+  private def tombstones(excludeLabel: Option[String]): Seq[Long] =
+    BatchedTable.tombstoneIds(spark, delDir, excludeLabel)
 
-  /** Anti-join `df` against the tombstone set. Broadcast by contract:
-    * tombstones are takedown-request-sized, never corpus-sized (a
-    * corpus-scale purge is a rebuild, not a delete).
-    */
   private def minusDeleted(df: DataFrame, excludeLabel: Option[String]): DataFrame =
-    tombstones(excludeLabel).fold(df)(t =>
-      df.join(broadcast(t), Seq("doc_id"), "left_anti"))
+    BatchedTable.minusDeleted(spark, delDir, df, excludeLabel)
+
+  /** The per-batch (label, n_docs, sum_dl) meta rows outside
+    * `excludeLabel`, collected once per listing of meta/
+    * ([[graft.Tables.fold]]).
+    */
+  private def metaRows(excludeLabel: Option[String]): Array[(String, Long, Long)] =
+    graft.Tables.fold(spark, "bm25-meta", metaDir) {
+      BatchedTable.readIdx(spark, metaDir, None)
+        .select(col("batch").cast("string"), col("n_docs"), col("sum_dl")).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    }.filterNot(r => excludeLabel.contains(r._1))
+
+  /** The corpus statistics (N, Σdl) outside `excludeLabel`, as double
+    * literals (null over no meta row, as the SQL sum is), so a probe
+    * plan carries no meta scan.
+    */
+  private def corpusStats(excludeLabel: Option[String]): (Column, Column) = {
+    val rows = metaRows(excludeLabel)
+    def total(v: Long): Column =
+      if (rows.isEmpty) lit(null).cast(DoubleType) else lit(v.toDouble)
+    (total(rows.map(_._2).sum), total(rows.map(_._3).sum))
+  }
 
   /** Build from the initial corpus (label `base`); clears prior state. */
   def build(corpus: DataFrame): Unit = {
@@ -199,8 +212,9 @@ class TermIndex(spark: SparkSession, path: String,
     // REPLAY of an append can never trip this: appends never write del/)
     require(!fs.exists(new Path(s"$delDir/batch=$label")),
       s"label '$label' was used by a delete — labels are unique across mutations")
-    tombstones(None).foreach { t =>
-      val clash = batch.select("doc_id").join(broadcast(t), "doc_id").limit(1).count()
+    val tombs = tombstones(None)
+    if (tombs.nonEmpty) {
+      val clash = batch.filter(col("doc_id").isin(tombs: _*)).limit(1).count()
       require(clash == 0,
         "append: batch contains tombstoned doc_ids — run reclaim(<delete label>) " +
           "(or a full compact()) before re-ingesting a deleted id")
@@ -301,7 +315,7 @@ class TermIndex(spark: SparkSession, path: String,
     // pushed In filter, so the (term, doc_id) row-group stats prune the
     // affected-batch discovery — a broadcast join here would scan every
     // postings row with no pushdown
-    val ids = spark.read.parquet(delPart.toString).select("doc_id")
+    val ids = graft.Tables.resolved(spark, delPart.toString).select("doc_id")
       .collect().map(_.getLong(0)).toSeq
     val n = ids.size.toLong
     if (n > 0) {
@@ -311,7 +325,7 @@ class TermIndex(spark: SparkSession, path: String,
         .collect().map(_.getString(0))
       affected.foreach { b =>
         BatchedTable.rewriteBatch(fs, postDir, b,
-          spark.read.parquet(s"$postDir/batch=$b")
+          graft.Tables.resolved(spark, s"$postDir/batch=$b")
             .filter(!col("doc_id").isin(ids: _*))
             .repartition(col("term")).sortWithinPartitions("term", "doc_id"))
       }
@@ -321,15 +335,16 @@ class TermIndex(spark: SparkSession, path: String,
     n
   }
 
-  /** The BM25 contribution of one postings row, given broadcast df and
-    * corpus (n, sdl) columns — the shared scoring kernel of [[search]]
-    * and [[searchBatch]].
+  /** The BM25 contribution of one postings row, given a broadcast df
+    * column and the corpus (n, sdl) — the shared scoring kernel of
+    * [[search]] and [[searchBatch]].
     */
-  private def contribCol: Column = {
-    val idf = log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5))
+  private def contribCol(stats: (Column, Column)): Column = {
+    val (n, sdl) = stats
+    val idf = log(lit(1.0) + (n - col("df") + 0.5) / (col("df") + 0.5))
     idf * (col("tf") * (k1 + 1.0)) /
       (col("tf") +
-        lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / (col("sdl") / col("n"))))
+        lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / (sdl / n)))
   }
 
   /** Filter-THEN-rank for the keyword arm: restrict a postings frame to
@@ -359,11 +374,11 @@ class TermIndex(spark: SparkSession, path: String,
     allowed.fold(post)(ids => post.join(
       ids.select(col("doc_id").cast(LongType).as("doc_id")), Seq("doc_id"), "left_semi"))
 
-  /** Postings filtered to `terms` + the corpus meta fold + per-term df
-    * — the three probe-side frames every search shape starts from.
+  /** Postings filtered to `terms` + the corpus (N, Σdl) + per-term df
+    * — the three probe-side inputs every search shape starts from.
     */
   private def probe(terms: Seq[String], excludeLabel: Option[String])
-      : (DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, (Column, Column), DataFrame) = {
     // loud, actionable failure instead of a bare path-not-found
     // AnalysisException deep inside the probe plan
     require(fs.exists(new Path(postDir)),
@@ -371,20 +386,18 @@ class TermIndex(spark: SparkSession, path: String,
     val post = minusDeleted(
       BatchedTable.readIdx(spark, postDir, excludeLabel)
         .filter(col("term").isin(terms: _*)), excludeLabel)
-    val meta = BatchedTable.readIdx(spark, metaDir, excludeLabel)
-      .agg(sum("n_docs").cast(DoubleType).as("n"),
-        sum("sum_dl").cast(DoubleType).as("sdl"))
     // df per term: postings rows are unique per (term, doc) across
     // batches (disjoint doc_ids), so df = filtered row count per term
     val dfs = post.groupBy("term").agg(count(lit(1)).cast(DoubleType).as("df"))
-    (post, meta, dfs)
+    (post, corpusStats(excludeLabel), dfs)
   }
 
   /** BM25 top-k (doc_id, bm25) for a keyword query over everything
     * indexed. The plan: one postings scan FILTERED to the query's
     * terms (pushdown + row-group pruning), df per term from that same
-    * filtered frame, N/avgdl from the meta fold (both broadcast-tiny),
-    * per-doc fixed-term-order score assembly, TakeOrdered(k).
+    * filtered frame (broadcast-tiny), N/avgdl as literals from the
+    * meta fold, per-doc fixed-term-order score assembly,
+    * TakeOrdered(k).
     * `excludeLabel` replays a batch against the pre-mutation index.
     * `padFrom` (a doc_id frame — the corpus universe) pads the top-k
     * with 0.0-score unmatched docs exactly as the one-shot query
@@ -406,11 +419,10 @@ class TermIndex(spark: SparkSession, path: String,
       else s"every query term was removed by the analyzer: ${rawTerms.mkString(", ")}")
     require(terms.distinct.size == terms.size,
       s"duplicate query terms would double-count: ${terms.mkString(", ")}")
-    val (post, meta, dfs) = probe(terms, excludeLabel)
+    val (post, stats, dfs) = probe(terms, excludeLabel)
     val scoredRows = restrictTo(post, allowed)
       .join(broadcast(dfs), "term")
-      .crossJoin(broadcast(meta))
-      .withColumn("__c", contribCol)
+      .withColumn("__c", contribCol(stats))
     // fixed-term-order sum: each term's contribution comes back as ONE
     // conditional-sum column (a single double per doc — no accumulation
     // order inside), then adds left-to-right in the caller's term
@@ -469,12 +481,10 @@ class TermIndex(spark: SparkSession, path: String,
     // `ids`, AQE broadcasts the small `mine` side of the join below, so
     // the vocabulary-sized df table never shuffles either way
     val dfs = post.groupBy("term").agg(count(lit(1)).cast(DoubleType).as("df"))
-    val meta = BatchedTable.readIdx(spark, metaDir, None)
-      .agg(sum("n_docs").cast(DoubleType).as("n"))
-    val idf = log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5))
+    val nDocs = corpusStats(None)._1
+    val idf = log(lit(1.0) + (nDocs - col("df") + 0.5) / (col("df") + 0.5))
     import org.apache.spark.sql.expressions.Window
     mine.join(dfs, "term")
-      .crossJoin(broadcast(meta))
       .withColumn("__sc", idf * col("tf"))
       .withColumn("__r", row_number().over(
         Window.partitionBy("doc_id").orderBy(desc("__sc"), asc("term"))))
@@ -516,11 +526,10 @@ class TermIndex(spark: SparkSession, path: String,
       s"moreLikeThis: index at $path not built — call build() first")
     val post = minusDeleted(BatchedTable.readIdx(spark, postDir, None), None)
     val dfs = post.groupBy("term").agg(count(lit(1)).cast(DoubleType).as("df"))
-    val meta = BatchedTable.readIdx(spark, metaDir, None)
-      .agg(sum("n_docs").cast(DoubleType).as("n"))
-    val wts = post.join(dfs, "term").crossJoin(broadcast(meta))
+    val n = corpusStats(None)._1
+    val wts = post.join(dfs, "term")
       .select(col("doc_id"), col("term").as("word"),
-        round(col("tf") * log(col("n") / col("df")) * 10000.0, 0)
+        round(col("tf") * log(n / col("df")) * 10000.0, 0)
           .cast(LongType).as("w"))
       .cache()
     (TextAnalysis.cosineNeighborsFromWeights(wts, col("doc_id").isin(ids: _*), k)
@@ -835,15 +844,14 @@ class TermIndex(spark: SparkSession, path: String,
       "duplicate terms within a query would double-count")
     if (terms.isEmpty) return None
     val allTerms = terms.map(_.getString(0)).toSeq
-    val (post, meta, dfs) = probe(allTerms, excludeLabel)
+    val (post, stats, dfs) = probe(allTerms, excludeLabel)
     // __qpos, not pos: the postings frame carries its own positional
     // `pos` column, and the join would make the bare name ambiguous
     val qt = queries.select(col("query_id"),
       posexplode(col("terms")).as(Seq("__qpos", "term")))
     Some(restrictTo(post, allowed)
       .join(broadcast(dfs), "term")
-      .crossJoin(broadcast(meta))
-      .withColumn("__c", contribCol)
+      .withColumn("__c", contribCol(stats))
       .join(broadcast(qt), "term")
       .groupBy("query_id", "doc_id")
       .agg(aggregate(
@@ -878,37 +886,28 @@ class TermIndex(spark: SparkSession, path: String,
     // its directory count bounds every table's listing cost
     val batches = fs.listStatus(new Path(metaDir))
       .map(_.getPath.getName).count(_.startsWith("batch="))
-    var files = 0L
-    val it = fs.listFiles(new Path(postDir), true)
-    while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) files += 1 }
-    val m = BatchedTable.readIdx(spark, metaDir, None)
-      .agg(coalesce(sum("n_docs"), lit(0L)), coalesce(sum("sum_dl"), lit(0L))).head()
-    val tomb = tombstones(None).map(_.count()).getOrElse(0L)
+    val files = graft.Tables.listing(spark, postDir).getOrElse(Vector.empty)
+      .count(_._1.endsWith(".parquet"))
+    val m = metaRows(None)
     spark.range(1).select(
       lit(batches.toLong).as("n_batches"),
-      lit(files).as("n_post_files"),
-      lit(m.getLong(0)).as("n_docs"),
-      lit(m.getLong(1)).as("sum_dl"),
-      lit(tomb).as("n_tombstones"))
+      lit(files.toLong).as("n_post_files"),
+      lit(m.map(_._2).sum).as("n_docs"),
+      lit(m.map(_._3).sum).as("sum_dl"),
+      lit(tombstones(None).size.toLong).as("n_tombstones"))
   }
 
-  /** A metadata-cheap content stamp: the hash of every batch
-    * directory name across post/meta/del — pure driver-side FS
-    * listings, no Spark job, no postings read. Every mutation path
-    * (append, delete, reclaim, compact, maintain) creates or removes
-    * a `batch=` directory, so any stamp-equal index serves the same
-    * rows; [[graft.vector.Serving.FusionServing]] keys its cross-call
-    * arms cache on this so a mutated index EVICTS, never serves
-    * stale shortlists.
+  /** A metadata-cheap content stamp: [[graft.Tables.stamp]] over
+    * post/meta/del — every file's path, size and mtime, a pure
+    * driver-side listing, no Spark job, no postings read. Every
+    * mutation path (append, delete, reclaim, compact, maintain, and a
+    * re-append of an existing label, which rewrites its files) moves
+    * it, so any stamp-equal index serves the same rows;
+    * [[graft.vector.Serving.FusionServing]] keys its cross-call arms
+    * cache on this so a mutated index EVICTS, never serves stale
+    * shortlists.
     */
-  private[graft] def contentStamp(): Long = {
-    val names = dirs.flatMap { d =>
-      val p = new Path(d)
-      if (fs.exists(p)) fs.listStatus(p).map(s => d + "/" + s.getPath.getName)
-      else Nil
-    }.sorted
-    names.foldLeft(17L)((acc, n) => acc * 31L + n.hashCode.toLong)
-  }
+  private[graft] def contentStamp(): Long = graft.Tables.stamp(spark, dirs: _*)
 
   /** Continuous text-query serving — the text twin of
     * [[graft.streaming.StreamingSearch]]: each micro-batch of keyword
@@ -1001,7 +1000,7 @@ class TermIndex(spark: SparkSession, path: String,
       .map(_.getPath.getName).count(_.startsWith("batch="))
     val tombs =
       if (maxTombstones == Long.MaxValue) 0L
-      else tombstones(None).map(_.count()).getOrElse(0L)
+      else tombstones(None).size.toLong
     val fold = batches > maxBatches || tombs > maxTombstones
     if (fold) compact(keepLabel)
     fold

@@ -123,7 +123,7 @@ object TopicCluster extends QueryModule {
   }
 
   private def writeSizes(s: SparkSession, dir: String): Unit =
-    s.read.parquet(s"$dir/assign").groupBy("cluster")
+    Tables.resolved(s, s"$dir/assign").groupBy("cluster")
       .agg(count(lit(1)).as("cluster_size")).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/sizes")
 
@@ -136,7 +136,7 @@ object TopicCluster extends QueryModule {
   }
 
   private def readModel(s: SparkSession, dir: String): Array[(Int, Array[Double])] =
-    s.read.parquet(s"$dir/model").collect()
+    Tables.resolved(s, s"$dir/model").collect()
       .map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toArray))
       .sortBy(_._1)
 
@@ -144,8 +144,8 @@ object TopicCluster extends QueryModule {
                         k: Int, iters: Int): DataFrame = {
     Served.ensure(s, src.dir, src.live, src.idCol, src.payloadCol)(_ =>
       persistModel(s, src, k, iters))
-    s.read.parquet(s"${src.dir}/assign")
-      .join(broadcast(s.read.parquet(s"${src.dir}/sizes")), "cluster")
+    Tables.resolved(s, s"${src.dir}/assign")
+      .join(broadcast(Tables.resolved(s, s"${src.dir}/sizes")), "cluster")
       .select(col(src.idCol), col("cluster"), col("cluster_size"))
   }
 
@@ -214,7 +214,7 @@ object TopicCluster extends QueryModule {
     val dir = src.dir
     require(Served.read(s, dir).isDefined,
       s"no served topic model at $dir — serve (or rebuild) before maintaining")
-    val cached = s.read.parquet(s"$dir/assign").select(src.idCol)
+    val cached = Tables.resolved(s, s"$dir/assign").select(src.idCol)
     val st = Served.stamp(src.live, src.idCol, src.payloadCol)
     if (retrain) {
       // count BEFORE the overwrite below: `cached`'s resolved file

@@ -40,6 +40,6 @@ object ServedMaxsim {
                                     docs: => DataFrame): DataFrame = {
     Served.ensure(s, dir, docs, "doc_id", "text")(live =>
       Serving.chunkComponents(live).write.mode("overwrite").parquet(s"$dir/chunks"))
-    s.read.parquet(s"$dir/chunks")
+    Tables.resolved(s, s"$dir/chunks")
   }
 }

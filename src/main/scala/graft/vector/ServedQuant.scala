@@ -39,7 +39,7 @@ object ServedQuant {
   }
 
   private def readBook(s: SparkSession, dir: String): ProductQuantizer.Model = {
-    val rows = s.read.parquet(s"$dir/book")
+    val rows = Tables.resolved(s, s"$dir/book")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val cents = rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, subRows) =>
       subRows.sortBy(_._2).map(_._3)
@@ -56,7 +56,7 @@ object ServedQuant {
   }
 
   private def readRot(s: SparkSession, dir: String): Pca.Model = {
-    val rows = s.read.parquet(s"$dir/rot")
+    val rows = Tables.resolved(s, s"$dir/rot")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val mean = rows.find(_._1 == "mean").get._3
     val comps = rows.filter(_._1 == "comp").sortBy(_._2).map(_._3)
@@ -85,7 +85,7 @@ object ServedQuant {
       writeCodes(s, dir, ProductQuantizer.encode(live, model))
       writeBook(s, dir, model)
     }
-    (readBook(s, dir), s.read.parquet(s"$dir/codes"))
+    (readBook(s, dir), Tables.resolved(s, s"$dir/codes"))
   }
 
   // --- OPQ lifecycle --------------------------------------------------
@@ -109,6 +109,6 @@ object ServedQuant {
       writeRot(s, dir, model.rotation)
     }
     (Opq.Model(readRot(s, dir), readBook(s, dir)),
-      s.read.parquet(s"$dir/codes"))
+      Tables.resolved(s, s"$dir/codes"))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.Tables.resolved
 import graft.expressions.VectorExpressions._
 
 /** Spark-native re-expression of the reference's vector-store surface
@@ -137,7 +138,6 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
       // a rebuild without PQ must not leave a stale codebook behind
       deleteDir(pqDir)
       deleteDir(opqDir)
-      pqMetaCache = None
       assigned
     }
     // id-sorted within each task so every parquet row group covers a
@@ -260,7 +260,6 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
         rows.toDF("shard", "m", "k", "centroid", "residual")
           .repartition(1).write.mode(SaveMode.Overwrite).parquet(pqDir)
     }
-    pqMetaCache = None
   }
 
   /** Persist the OPQ rotation: one row per rotated dim j holding the
@@ -271,30 +270,29 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     comps.zipWithIndex.map { case (c, j) => (j, c.toSeq) }.toSeq
       .toDF("j", "component")
       .repartition(1).write.mode(SaveMode.Overwrite).parquet(opqDir)
-    pqMetaCache = None
   }
 
   /** (codebooks, isResidual, rotation) in ONE read of the codebook
     * parquet (+ one of the rotation when present) —
-    * store/upsert/search need them together. Memoized: the codebook
-    * only changes on [[build]] (which invalidates), so per-call reads
-    * would add driver-side parquet jobs of pure overhead to every
-    * [[streamStore]] micro-batch. Under the store's single-writer
-    * contract no OTHER process rebuilds the codebook out from under a
-    * live handle.
+    * store/upsert/search need them together. Folded over `pq/` and
+    * `opq/` by [[graft.Tables.fold]]: re-read only when either
+    * directory's listing changed, so every handle on this path — not
+    * just the one that rebuilt — serves the current books. Returned
+    * as a copy: callers may not reach the cached arrays.
     */
-  @volatile private var pqMetaCache: Option[Option[PqMeta]] = None
-
   private[vector] final case class PqMeta(books: ProductQuantizer.Books, residual: Boolean,
                                           rotation: Option[Array[Array[Double]]])
 
   private[vector] def pqMeta(): Option[PqMeta] =
-    pqMetaCache match {
-      case Some(m) => m
-      case None =>
-        val m = readPqMeta()
-        pqMetaCache = Some(m)
-        m
+    graft.Tables.fold(spark, "pq-meta", pqDir, opqDir)(readPqMeta()).map { m =>
+      def copy(pm: ProductQuantizer.Model) =
+        pm.copy(centroids = pm.centroids.map(_.map(_.clone())))
+      val books = m.books match {
+        case ProductQuantizer.GlobalBooks(pm) => ProductQuantizer.GlobalBooks(copy(pm))
+        case ProductQuantizer.PerShardBooks(ms) =>
+          ProductQuantizer.PerShardBooks(ms.map { case (s, pm) => s -> copy(pm) })
+      }
+      PqMeta(books, m.residual, m.rotation.map(_.map(_.clone())))
     }
 
   private def readPqMeta(): Option[PqMeta] = {
@@ -302,7 +300,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
-      val df = spark.read.parquet(pqDir)
+      val df = resolved(spark, pqDir)
       val residual = df.columns.contains("residual")
       def toModel(rows: Array[((Int, Int), Array[Double])]): ProductQuantizer.Model = {
         val numSub = rows.map(_._1._1).max + 1
@@ -323,7 +321,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
             .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))))
       // absent rotation dir => identity (pre-OPQ stores read unchanged)
       val rot = if (!fs.exists(new org.apache.hadoop.fs.Path(opqDir))) None
-        else Some(spark.read.parquet(opqDir).collect()
+        else Some(resolved(spark, opqDir).collect()
           .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
           .sortBy(_._1).map(_._2))
       Some(PqMeta(books, residual && df.select("residual").head().getBoolean(0), rot))
@@ -354,10 +352,15 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
       .repartition(1).write.mode(SaveMode.Overwrite).parquet(centDir)
   }
 
-  /** The routing table the reference serves at GET / . */
+  /** The routing table the reference serves at GET / . Collected
+    * once per listing of `centroids/` ([[graft.Tables.fold]]), and
+    * returned as a copy.
+    */
   def centroids(): Array[(Int, Array[Double])] =
-    spark.read.parquet(centDir).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+    graft.Tables.fold(spark, "centroids", centDir) {
+      resolved(spark, centDir).collect()
+        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
+    }.map { case (s, c) => (s, c.clone()) }
 
   /** Deterministic stamp of the ROUTING state — the persisted recall
     * curve's provenance mark. Any mutation that changes where queries
@@ -427,7 +430,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
   /** The store's current provenance stamps: its routing and row count. */
   private def storeStamps(): Map[String, Long] =
     Map("cent_stamp" -> centStamp(centroids()),
-      "n_rows" -> spark.read.parquet(vecDir).count())
+      "n_rows" -> resolved(spark, vecDir).count())
 
   /** Persist one measurement of a curve family. It replaces the rows of
     * its `mode` for its slice kind (a slice measurement replaces any
@@ -509,7 +512,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     * TEXT (storage_server.py:17-20), so string ids work unchanged.
     */
   def get(id: Any): DataFrame =
-    spark.read.parquet(vecDir).filter(col(idCol) === lit(id))
+    resolved(spark, vecDir).filter(col(idCol) === lit(id))
 
   /** Batched [[get]] reshaped to the probe contract: the (query_id,
     * qv) frame for a literal list of stored ids — query-by-example's
@@ -520,7 +523,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     */
   def vectorsOf(ids: Seq[Long]): DataFrame = {
     require(ids.nonEmpty, "no ids")
-    spark.read.parquet(vecDir)
+    resolved(spark, vecDir)
       .filter(col(idCol).isin(ids: _*))
       .select(col(idCol).cast(org.apache.spark.sql.types.LongType).as("query_id"),
         col(vecCol).cast("array<double>").as("qv"))
@@ -528,7 +531,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
 
   /** Per-shard id inventory (reference /list_ids). */
   def listIds(): DataFrame =
-    spark.read.parquet(vecDir)
+    resolved(spark, vecDir)
       .groupBy("shard")
       .agg(count(lit(1)).as("n_vectors"), min(idCol).as("min_id"), max(idCol).as("max_id"))
 
@@ -548,7 +551,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     */
   def semDedup(threshold: Double = 0.75, pairSalt: Int = 8,
                maxPairsPerTask: Long = 0L): DataFrame = {
-    val a = spark.read.parquet(vecDir)
+    val a = resolved(spark, vecDir)
       .select(col(idCol).as("vec_id"), col("shard").cast(LongType).as("shard"),
         col(vecCol).cast("array<double>").as("embedding"))
     graft.dedup.Dedup.clusterKeepDrop(a, threshold, pairSalt, maxPairsPerTask)
@@ -586,7 +589,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
       .getOrElse(routed).localCheckpoint(true)
     try {
       // partition-column inference reads shard back as int: normalize
-      val current = spark.read.parquet(vecDir)
+      val current = resolved(spark, vecDir)
         .withColumn("shard", col("shard").cast("long"))
       // an id's new vector may route to a different shard than its old
       // copy: rewrite both the destination shards and the shards that
@@ -626,7 +629,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     * steps — see [[upsert]]'s consistency contract.
     */
   def delete(ids: Seq[Any]): Array[Long] = {
-    val all = spark.read.parquet(vecDir)
+    val all = resolved(spark, vecDir)
       .withColumn("shard", col("shard").cast("long"))
     val touched = all.filter(col(idCol).isin(ids: _*))
       .select("shard").distinct().collect().map(_.getLong(0))
@@ -651,7 +654,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     * Returns (shards rewritten, vectors re-routed).
     */
   def refreshCentroids(sampleFraction: Double = 0.1, iters: Int = 3): (Array[Long], Long) = {
-    val all = spark.read.parquet(vecDir)
+    val all = resolved(spark, vecDir)
       .withColumn("shard", col("shard").cast("long"))
     val sample = if (sampleFraction < 1.0) all.sample(sampleFraction, 42L) else all
     val (cents, _) = Centroids.lloydFrom(sample, idCol, vecCol, centroids(), iters)
@@ -772,7 +775,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     graft.sources.BatchedTable.recoverDirSwap(fs, driftBaselineDir)
     if (!fs.exists(p)) None
     else scala.util.Try(
-      spark.read.parquet(driftBaselineDir).head().getLong(0)).toOption
+      resolved(spark, driftBaselineDir).head().getLong(0)).toOption
   }
 
   /** One-scan health probe: per shard, the population, the load
@@ -791,7 +794,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
   def health(): DataFrame = {
     val cents = centroids()
     val centLit = typedlit(cents.map { case (s, c) => (s.toLong, c.toSeq) }.toMap)
-    val perShard = spark.read.parquet(vecDir)
+    val perShard = resolved(spark, vecDir)
       .withColumn("shard", col("shard").cast(LongType))
       .groupBy("shard")
       .agg(count(lit(1)).as("n"),
@@ -864,7 +867,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
         "approximates dot/cosine — there is no compressed L2/IP serving " +
         "path to measure (searchJoin refuses the combination too)")
     val cents = centroids()
-    val raw = spark.read.parquet(vecDir)
+    val raw = resolved(spark, vecDir)
     // the exact arm's bounded-heap aggregate (TopKAgg) carries Long
     // ids; a string-id store would fail deep inside codegen — fail
     // loudly here instead (recall is an id-agnostic property: eval a
@@ -984,7 +987,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     val k = numShards
     // a slice restricts the ADC candidate universe the same way
     // compressed serving with `allowed` does: filter before scoring
-    val codes = restrictSlice(spark.read.parquet(vecDir)
+    val codes = restrictSlice(resolved(spark, vecDir)
       .select(col(idCol).cast(LongType).as("vec_id"),
         col("shard").cast(LongType).as("shard"), col("pq_codes"), col("vnorm")),
       allowed)
@@ -1142,7 +1145,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
   def evalRangeRecall(minScore: Double, nQueries: Int = 64,
                       allowed: Option[DataFrame] = None): DataFrame = {
     val cents = centroids()
-    val store = spark.read.parquet(vecDir)
+    val store = resolved(spark, vecDir)
       .select(col(idCol).cast(LongType).as("vec_id"),
         col("shard").cast(LongType).as("shard"),
         col(vecCol).cast("array<double>").as("embedding"))
@@ -1252,7 +1255,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     // curve is the slice's own page geometry. Rows key by the allowed
     // set's content stamp, the evalRecall discipline.
     val aStamp = sliceStamp(allowed)
-    val assigned = restrictSlice(spark.read.parquet(vecDir)
+    val assigned = restrictSlice(resolved(spark, vecDir)
       .select(col(idCol).cast(LongType).as("vec_id"),
         col("shard").cast(LongType).as("shard"),
         col(vecCol).cast("array<double>").as("embedding")), allowed)
@@ -1283,7 +1286,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
           val meta = pqMeta().getOrElse(throw new IllegalStateException(
             "evalFusionRecall(compressed = true) needs a PQ-built store: " +
               "build(pqSubspaces > 0)"))
-          val coded = restrictSlice(spark.read.parquet(vecDir)
+          val coded = restrictSlice(resolved(spark, vecDir)
             .select(col(idCol).cast(LongType).as("vec_id"),
               col("shard").cast(LongType).as("shard"),
               col("pq_codes").as("codes"), col("vnorm")), allowed)
@@ -1312,7 +1315,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
         .withColumn("idx_stamp", lit(idx.contentStamp()))
         // n_rows stamps the UNFILTERED store (row-count drift is a
         // store-level signal; the slice's identity is allowed_stamp)
-        .withColumn("n_rows", lit(spark.read.parquet(vecDir).count()))
+        .withColumn("n_rows", lit(resolved(spark, vecDir).count()))
         .withColumn("allowed_stamp", lit(aStamp))
         .select("nprobe", "recall_x1e4", "n_queries", "top_k", "shortlist",
           "rrf_k", "compressed", "vec_shortlist", "cent_stamp", "idx_stamp",
@@ -1379,7 +1382,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
   def fusionSampleFrom(idx: graft.text.TermIndex, nQueries: Int = 64,
                        termsPerQuery: Int = 3,
                        stratified: Boolean = false): DataFrame = {
-    val base = spark.read.parquet(vecDir)
+    val base = resolved(spark, vecDir)
       .select(col(idCol).cast(LongType).as("query_id"),
         col("shard").cast(LongType).as("__sh"),
         col(vecCol).cast("array<double>").as("qv"))
@@ -1461,7 +1464,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
         case 0L => Some(None)
         case st => sliceIdsCache.getOrElseUpdate(st, {
           val d = s"$sliceIdsDir/stamp=$st"
-          if (exists(d)) Some(spark.read.parquet(d).localCheckpoint(true))
+          if (exists(d)) Some(resolved(spark, d).localCheckpoint(true))
           else None
         }).map(Some(_))
       }
@@ -1506,7 +1509,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
           val sampleOk = exists(fusionQueriesDir)
           val done = stale.count(m => (idx, sliceArg(m)) match {
             case (Some(i), Some(a)) if sampleOk =>
-              evalFusionRecall(i, spark.read.parquet(fusionQueriesDir),
+              evalFusionRecall(i, resolved(spark, fusionQueriesDir),
                 topK = m.getAs[Long]("top_k").toInt,
                 shortlist = m.getAs[Long]("shortlist").toInt,
                 rrfK = m.getAs[Long]("rrf_k").toInt,
@@ -1674,7 +1677,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
         "geometry (searchJoin's contract)")
     val cents = centroids()
     val probe = Centroids.nearestShardsOf(q, cents, nprobe).map(_.toLong)
-    val probedAll = spark.read.parquet(vecDir).filter(col("shard").isin(probe: _*))
+    val probedAll = resolved(spark, vecDir).filter(col("shard").isin(probe: _*))
     val probed = allowed match {
       case Some(ids) => probedAll.join(ids.select(col(idCol)), Seq(idCol), "left_semi")
       case None => probedAll
@@ -1807,7 +1810,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
       "searchJoin(compressed = true) is cosine-only: the ADC state " +
         "approximates dot/cosine — an L2/IP shortlist through it would " +
         "rank on the wrong geometry")
-    val raw = spark.read.parquet(vecDir)
+    val raw = resolved(spark, vecDir)
     require(Seq[org.apache.spark.sql.types.DataType](
         org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.IntegerType,
         org.apache.spark.sql.types.ShortType)
@@ -1940,7 +1943,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
       maxRowsPerTask = maxRowsPerTask,
       compressed = compressed, shortlist = adcShortlist)
     val rows = short
-      .join(spark.read.parquet(vecDir).select(col(idCol).cast(LongType).as(idCol),
+      .join(resolved(spark, vecDir).select(col(idCol).cast(LongType).as(idCol),
         col(vecCol).cast("array<double>").as("__v")), idCol)
       .select(col("query_id"), col(idCol), col("__v"), col("score"))
       .collect()
@@ -2003,7 +2006,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
       s"queries must be (query_id, qv), got ${queries.columns.mkString(", ")}")
     require(nprobe >= 1 && nprobe <= numShards, s"nprobe out of range: $nprobe")
     require(margin >= 0.0, s"margin must be non-negative: $margin")
-    val raw = spark.read.parquet(vecDir)
+    val raw = resolved(spark, vecDir)
     def restrict(df: DataFrame): DataFrame = allowed match {
       case Some(ids) => df.join(
         ids.select(col(idCol).cast(LongType).as(idCol)), Seq(idCol), "left_semi")
@@ -2125,7 +2128,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
     val salts =
       if (maxRowsPerTask <= 0L) None
       else {
-        val base = spark.read.parquet(vecDir).select(
+        val base = resolved(spark, vecDir).select(
           col(idCol).cast(LongType).as(idCol),
           col("shard").cast(LongType).as("shard"))
         val restricted = allowedPinned.fold(base)(ids =>

@@ -1797,6 +1797,58 @@ class VectorSpec extends AnyFunSuite {
     fs.invalidateArms()
   }
 
+  test("armsCached: re-appending an existing label with different docs evicts") {
+    import spark.implicits._
+    val n = 64
+    val corpus = spark.range(0, n, 1, 4).select(col("id"),
+      array((0 until 8).map(d =>
+        (pmod(hash(col("id"), lit(d)), lit(101)).cast("double") - 50.0) / 50.0): _*)
+        .as("vector"))
+    val vs = new VectorStore(spark, Files.createTempDirectory("graft-fusra-v").toString,
+      numShards = 2)
+    vs.build(corpus, iters = 2)
+    val idx = new graft.text.TermIndex(spark,
+      Files.createTempDirectory("graft-fusra-t").toString)
+    idx.build(spark.range(0, n).select(col("id").as("doc_id"),
+      concat(lit("w"), pmod(col("id"), lit(7))).as("text")))
+    val qv = corpus.filter(col("id") === 5L).select(col("vector").cast("array<double>"))
+      .head().getSeq[Double](0)
+    def batch() = Seq((5L, Seq("merge"), qv)).toDF("query_id", "terms", "qv")
+    def docs(text: String) = spark.range(n, n + 8).select(col("id").as("doc_id"),
+      lit(text).as("text"))
+    def kwIds(rows: Array[org.apache.spark.sql.Row]) = rows.map(_.getAs[Long]("doc_id")).toSet
+    val fs = graft.vector.Serving.fusionServing(idx, vs, topK = 5, shortlist = 10,
+      nprobe = 2)
+    // the same label, re-appended: its directory names stay, its files change
+    idx.append(docs("fx fy"), "b1")
+    fs.armsCached(batch())
+    idx.append(docs("merge merge"), "b1")
+    val fresh = graft.vector.Serving.hybridJoin(idx, vs, batch(), topK = 5,
+      shortlist = 10, nprobe = 2).collect()
+    assert(kwIds(fresh).exists(_ >= n), "the re-appended docs carry the query term")
+    assert(fs.hybrid(fs.armsCached(batch())).collect().toSet === fresh.toSet,
+      "a page after the re-append must rank the new documents")
+    fs.invalidateArms()
+  }
+
+  test("a store handle serves another handle's PQ rebuild") {
+    val dir = Files.createTempDirectory("graft-pqhandles").toString
+    val emb = Tables.embeddings(spark, sf)
+      .select(col("vec_id").as("id"), col("embedding").as("vector"))
+    def books(vs: VectorStore) = vs.pqBooks().collect {
+      case graft.vector.ProductQuantizer.GlobalBooks(m) =>
+        m.centroids.map(_.map(_.toSeq).toSeq).toSeq
+    }
+    val a = new VectorStore(spark, dir, numShards = 4)
+    a.build(emb, iters = 2, pqSubspaces = 8, pqCodes = 16)
+    val before = books(a)
+    val b = new VectorStore(spark, dir, numShards = 4)
+    b.build(emb, iters = 2, pqSubspaces = 16, pqCodes = 8)
+    assert(books(b) !== before)
+    assert(books(a) === books(b), "handle A must serve B's rebuilt codebooks")
+    assert(a.pqModel().map(_.numSubspaces) === Some(16))
+  }
+
   test("evalRangeRecall: measured radius curve matches a driver mirror; nprobeForRange tunes and refuses stale") {
     import spark.implicits._
     val n = 256

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchemaInterop
 import org.apache.spark.sql.types.StructType
 
 /** Loaders for the test corpus (TPC-H-ish star schema + events stream
@@ -16,7 +17,7 @@ object Tables {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     resolved(spark, s"$dir/$name.parquet")
 
-  /** The parquet table at `dir`, with no Spark job when it is warm.
+  /** The parquet table at `dir`, with no Spark job.
     *
     * The schema is cached per session, keyed by the qualified path
     * and checked against a driver-side [[listing]] of every file's
@@ -25,7 +26,8 @@ object Tables {
     * skips schema inference; Spark still lists the files itself, so
     * the rows are always current. Any append, upsert, delete,
     * compaction or write by another process changes the listing,
-    * which re-infers and replaces the entry. An absent directory is
+    * which re-reads the schema from one footer on the driver
+    * ([[footerSchema]]) and replaces the entry. An absent directory is
     * read uncached, so it fails exactly as `spark.read.parquet` does.
     */
   def resolved(spark: SparkSession, dir: String): DataFrame =
@@ -37,11 +39,65 @@ object Tables {
         m.get(key) match {
           case Entry(Seq(Some(`l`)), s: StructType) => spark.read.schema(s).parquet(dir)
           case _ =>
-            val df = spark.read.parquet(dir)
+            val df = footerSchema(spark, dir, l)
+              .fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
             m.put(key, Entry(Seq(Some(l)), df.schema))
             df
         }
     }
+
+  /** The data schema of `dir`, read from one footer on the driver.
+    * Without `mergeSchema`, Spark's inference reads one footer too (the
+    * first `_common_metadata`, else `_metadata`, else a data file:
+    * `ParquetUtils.inferSchema`), but in a Spark job. The same rule is
+    * applied here to the listing, in path order. The partition columns
+    * are still discovered by Spark's own listing. None, so Spark
+    * infers, under `mergeSchema` or when the listing holds no data
+    * file.
+    */
+  private def footerSchema(spark: SparkSession, dir: String, l: Listing): Option[StructType] =
+    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) None
+    else {
+      val rels = l.map(_._1)
+      Seq[String => Boolean](r => name(r) == "_common_metadata", r => name(r) == "_metadata",
+          isDataFile)
+        .flatMap(rels.find).headOption
+        .flatMap(rel => FooterSchemaInterop.schemaOf(spark, statuses(spark, dir, Seq(rel)).head))
+    }
+
+  /** The largest value of the int column `column` in the parquet files
+    * under `dir`, from their footers' row-group statistics, with no
+    * Spark job: Some(None) when the files hold no row group, None when
+    * a row group carries no statistics for the column.
+    */
+  private[graft] def footerMax(spark: SparkSession, dir: String,
+                               column: String): Option[Option[Int]] = {
+    import scala.jdk.CollectionConverters._
+    val files = statuses(spark, dir, listing(spark, dir).toSeq.flatten.map(_._1).filter(isDataFile))
+    val stats = files.flatMap(FooterSchemaInterop.footer(spark, _).getBlocks.asScala)
+      .map(_.getColumns.asScala.find(_.getPath.toDotString == column)
+        .map(_.getStatistics).filter(s => s != null && s.hasNonNullValue))
+    if (stats.exists(_.isEmpty)) None
+    else Some(stats.flatten.map(_.genericGetMax.asInstanceOf[Integer].intValue).maxOption)
+  }
+
+  private def name(rel: String): String = rel.substring(rel.lastIndexOf('/') + 1)
+
+  /** A listed file Spark reads as data: not a `_`-prefixed summary or
+    * marker file, not a copy in progress.
+    */
+  private def isDataFile(rel: String): Boolean =
+    !name(rel).startsWith("_") && !rel.endsWith("._COPYING_")
+
+  /** The status of each of `rels`, files listed under `dir` — or of
+    * `dir` itself when it is a file.
+    */
+  private def statuses(spark: SparkSession, dir: String, rels: Seq[String]): Seq[FileStatus] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(root)
+    if (st.isFile) Seq(st) else rels.map(r => fs.getFileStatus(new Path(root, r)))
+  }
 
   /** A small driver-side value derived from `dirs` (centroids,
     * codebooks, an index's statistics), cached under `name` against
@@ -189,13 +245,28 @@ object Tables {
     val files = rels.flatten
     if (rels.nonEmpty && files.isEmpty) return df // non-file relation
     // (JDBC/stream source) and no file scan: unknown parallelism, don't
-    // second-guess it. A PLAN WITH NO LogicalRelation AT ALL (in-memory
-    // / checkpointed test fixture) keeps the pre-gate behavior and fans
-    // to p — never a 100 TB scan. Mixed file + non-file plans decide
-    // from the file scans alone (they are what the fan parallelizes);
-    // r15 summed a Long.MaxValue sentinel here, which OVERFLOWED on
-    // mixed plans and forced a full-table repartition at any scale.
-    if (rels.isEmpty) return df.repartition(p, key)
+    // second-guess it. Mixed file + non-file plans decide from the file
+    // scans alone (they are what the fan parallelizes); r15 summed a
+    // Long.MaxValue sentinel here, which OVERFLOWED on mixed plans and
+    // forced a full-table repartition at any scale.
+    // Byte-aware width (r16): size the fan from the input, not a flat
+    // defaultParallelism — clamp(ceil(bytes / target), 1, p). A 600 KB
+    // single-file table fans ~10 wide instead of 32 (the scheduling
+    // overhead the 8-core inversions measured); a 10 MB one still
+    // fans to p.
+    def width(bytes: BigInt): Int = {
+      val target = fanTargetBytes(s)
+      ((bytes + target - 1) / target).max(1).min(p).toInt
+    }
+    // A PLAN WITH NO LogicalRelation AT ALL (an in-memory batch, a
+    // checkpoint) always fans — never a 100 TB scan — at the width of
+    // its own size estimate: exact for a local relation, so a batch of
+    // a few dozen rows is coalesced into one partition with no shuffle,
+    // and everything keyed downstream of it needs no further exchange.
+    if (rels.isEmpty) {
+      val w = width(df.queryExecution.optimizedPlan.stats.sizeInBytes)
+      return if (w == 1) df.coalesce(1) else df.repartition(w, key)
+    }
     // Estimated splits per relation: ceil((bytes + nFiles·openCost) /
     // maxSplitBytes) — openCost charged per file exactly as
     // FilePartition packs them (the r15 nFiles·32 cap UNDERcounted
@@ -207,16 +278,9 @@ object Tables {
       val charged = bytes + nFiles * conf.filesOpenCostInBytes
       math.max(1L, (charged + maxSplit - 1) / maxSplit)
     }.sum
-    // Byte-aware width (r16): size the fan from the input, not a flat
-    // defaultParallelism — clamp(ceil(bytes / target), 1, p). A 600 KB
-    // single-file table fans ~10 wide instead of 32 (the scheduling
-    // overhead the 8-core inversions measured); a 10 MB one still
-    // fans to p; a scan already at least `width` parallel is left
-    // alone entirely.
-    val totalBytes = files.map(_._1).sum
-    val width = math.max(1L, math.min(p.toLong,
-      (totalBytes + fanTargetBytes(s) - 1) / fanTargetBytes(s))).toInt
-    if (splits < width) df.repartition(width, key) else df
+    // a scan already at least `width` parallel is left alone entirely
+    val w = width(files.map(_._1).sum)
+    if (splits < w) df.repartition(w, key) else df
   }
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")

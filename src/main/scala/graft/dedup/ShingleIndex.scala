@@ -2,8 +2,9 @@ package graft.dedup
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 import graft.Tables.resolved
 
@@ -158,8 +159,10 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
     require(label != "base" && label != "compact0" && label.nonEmpty,
       s"reserved/empty batch label '$label'")
 
+  // one partition: the row is one file (a bare range(1) also writes an
+  // empty file for its first, rowless slice)
   private def writeMeta(label: String, nDocs: Long, nShingles: Long): Unit =
-    writeBatch(spark.range(1).select(lit(nDocs).as("n_docs"),
+    writeBatch(spark.range(0, 1, 1, 1).select(lit(nDocs).as("n_docs"),
       lit(nShingles).as("n_shingles")), metaDir, label)
 
   private def writeBatch(df: DataFrame, dir: String, label: String): Unit =
@@ -208,34 +211,30 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
     // (an append REPLAY can never trip this: appends never write del/)
     require(!fs.exists(new Path(s"$delDir/batch=$label")),
       s"label '$label' was used by a delete — labels are unique across mutations")
-    // a tombstoned id's new copy would be silently hidden by its own
-    // tombstone — refuse until a compact() reclaims the delete
-    val tombs = tombstones(None)
-    if (tombs.nonEmpty) {
-      val clash = batch.filter(col("doc_id").isin(tombs: _*)).limit(1).count()
-      require(clash == 0,
+    val sh = Dedup.shinglesOf(batch)
+    val caches = ShingleIndex.cacheUnlessLocal(batch, sh)
+    try {
+      // corpus size and df EXCLUDE this label's own rows (present on a
+      // replay, absent on the first run — excluding makes both equal),
+      // and the batch's own df counts once: the insert-time cap,
+      // identical on first run and replay
+      val nIndexed = nDocs(Some(label))
+      val c = ShingleIndex.capped(batch, sh, Seq(readIdx(dfDir, Some(label))),
+        tombstones(None))(n => math.max(dfCapFloor, math.ceil((nIndexed + n) * maxDfFraction).toLong))
+      // a tombstoned id's new copy would be silently hidden by its own
+      // tombstone — refuse until a compact() reclaims the delete
+      require(!c.clash,
         "append: batch contains tombstoned doc_ids — run reclaim(<delete label>) " +
           "(or a full compact()) before re-ingesting a deleted id")
-    }
-    val sh = Dedup.shinglesOf(batch).cache()
-    writeBatch(sh.groupBy("s").agg(count(lit(1)).as("df")), dfDir, label)
-    // corpus size EXCLUDES this label's own meta row (present on a
-    // replay, absent on the first run — excluding makes both equal);
-    // df INCLUDES this label's delta exactly once (just overwritten):
-    // the insert-time cap, identical on first run and replay
-    val nBatch = batch.select("doc_id").distinct().count()
-    val cap = math.max(dfCapFloor,
-      math.ceil((nDocs(Some(label)) + nBatch) * maxDfFraction).toLong)
-    val capped = sh.join(dfNow().filter(col("df") <= cap).select("s"), "s")
-      .localCheckpoint(true)
-    writeBatch(capped, shDir, label)
-    writeBatch(capped.groupBy("doc_id").agg(count(lit(1)).as("n")), szDir, label)
-    writeBatch(fpOf(batch), fpDir, label)
-    writeBatch(Dedup.bandKeysAt(capped, currentBanding()), bandDir, label)
-    // meta last: it describes a fully-written batch directory set
-    writeMeta(label, nBatch, capped.count())
-    sh.unpersist()
-    org.apache.spark.sql.graftshim.CheckpointInterop.unpersistCheckpoint(capped)
+      writeBatch(sh.groupBy("s").agg(count(lit(1)).as("df")), dfDir, label)
+      val capped = ShingleIndex.without(sh, c.hot).select("s", "doc_id")
+      writeBatch(capped, shDir, label)
+      writeBatch(capped.groupBy("doc_id").agg(count(lit(1)).as("n")), szDir, label)
+      writeBatch(fpOf(batch), fpDir, label)
+      writeBatch(Dedup.bandKeysAt(capped, currentBanding()), bandDir, label)
+      // meta last: it describes a fully-written batch directory set
+      writeMeta(label, c.nBatch, c.nShingles)
+    } finally caches.foreach(_.unpersist())
   }
 
   /** Takedown: remove `ids` from the judged corpus without a rebuild.
@@ -312,9 +311,12 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
             Dedup.shinglesOf(liveTexts)
         }
         writeBatch(negSrc.groupBy("s").agg((-count(lit(1))).as("df")), dfDir, label)
-        val nDel = live.count()
-        writeMeta(label, -nDel, -liveSh.count())
-        nDel
+        // both counts in one job over the two checkpoints
+        val n = live.select(lit(1L).as("d"), lit(0L).as("p"))
+          .union(liveSh.select(lit(0L), lit(1L)))
+          .coalesce(1).agg(coalesce(sum("d"), lit(0L)), coalesce(sum("p"), lit(0L))).head()
+        writeMeta(label, -n.getLong(0), -n.getLong(1))
+        n.getLong(0)
       } finally org.apache.spark.sql.graftshim.CheckpointInterop.unpersistCheckpoint(liveSh)
     } finally org.apache.spark.sql.graftshim.CheckpointInterop.unpersistCheckpoint(live)
   }
@@ -487,14 +489,16 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
       else {
         val latest = batches
           .maxBy(st => (st.getModificationTime, st.getPath.getName)).getPath
-        val m = resolved(spark, latest.toString)
-          .agg(max(col("band"))).head()
-        if (m.isNullAt(0)) {
-          // empty newest batch (all rows tombstoned out at rewrite):
-          // fall back to the previous global derivation
+        // the batch's max band, from its footers' statistics when they
+        // carry it; none for an empty newest batch (all rows tombstoned
+        // out at rewrite): fall back to the previous global derivation
+        graft.Tables.footerMax(spark, latest.toString, "band").getOrElse {
+          val m = resolved(spark, latest.toString).agg(max(col("band"))).head()
+          if (m.isNullAt(0)) None else Some(m.getInt(0))
+        }.map(_ + 1).getOrElse {
           val g = readIdx(bandDir, None).agg(max(col("band"))).head()
           if (g.isNullAt(0)) Dedup.Bands else g.getInt(0) + 1
-        } else m.getInt(0) + 1
+        }
       }
     }
   }
@@ -711,12 +715,20 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
         requireDir(bandDir, "bands/ table")
         minusDeleted(readIdx(bandDir, excludeLabel), excludeLabel)
       }
-      def dfTotals(keys: DataFrame): DataFrame = dfNow(excludeLabel)
+      def dfRows: Seq[DataFrame] = Seq(readIdx(dfDir, excludeLabel))
     }
 
   /** The one judging plan, over whichever [[ShingleIndex.CorpusView]]
     * serves the corpus side (the live per-call reads, or a
     * [[ShingleProbe]]'s resolved snapshot + deltas).
+    *
+    * Every corpus-side table is scanned once and joined map-side
+    * against a batch-bounded broadcast side (see the broadcast posture
+    * below), each batch subtree is planned once, and the verdicts are
+    * one batch-sized aggregate. A small batch's shingles sit in one
+    * partition, a larger one's are hash-partitioned by doc_id (the
+    * shingling fans by it), so each doc's capped-set size is a window
+    * with no exchange.
     */
   private[dedup] def judgeCore(view: ShingleIndex.CorpusView, batch: DataFrame,
                                threshold: Double,
@@ -732,27 +744,16 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
           f"$theo%.2f at threshold $threshold — reband() to a wider banding " +
           "(pick one with measureBanding/bandingFor)")
     }
-    val bsh = Dedup.shinglesOf(batch).cache()
-    val bIds = batch.select("doc_id")
-    val exactDup = fpOf(batch)
-      .join(view.fps.distinct(), Seq("fp"), "left_semi")
-      .select(col("doc_id")).withColumn("__exact", lit(1L))
-    // judge-time cap over the union: index df (compact probe) + this
-    // batch's own df — a shingle that went hot since its insert stops
-    // producing candidates NOW, even before any rebuild re-caps it
-    val cap = math.max(dfCapFloor,
-      math.ceil((view.nDocs + batch.select("doc_id").distinct().count())
-        * maxDfFraction).toLong)
-    val bdf = bsh.groupBy("s").agg(count(lit(1)).as("df_b"))
-    // dfTotals may return only the batch's own keys (a probe) or the
-    // whole df table (the live view): rows that never match bsh drop
-    // at the bCapped join either way, so both are the same filter
-    val unionDf = view.dfTotals(bdf.select("s"))
-      .join(bdf, Seq("s"), "full")
-      .filter(coalesce(col("df"), lit(0L)) + coalesce(col("df_b"), lit(0L)) <= cap)
-      .select("s")
-    val bCapped = bsh.join(unionDf, "s")
-    val bSizes = bCapped.groupBy("doc_id").agg(count(lit(1)).as("na"))
+    val bsh = Dedup.shinglesOf(batch)
+    val caches = ShingleIndex.cacheUnlessLocal(batch, bsh)
+    // judge-time cap over the union: index df + this batch's own df —
+    // a shingle that went hot since its insert stops producing
+    // candidates NOW, even before any rebuild re-caps it
+    val nIndexed = view.nDocs
+    val hot = ShingleIndex.capped(batch, bsh, view.dfRows, Nil)(n =>
+      math.max(dfCapFloor, math.ceil((nIndexed + n) * maxDfFraction).toLong)).hot
+    val bCapped = ShingleIndex.without(bsh, hot)
+      .withColumn("na", count(lit(1)).over(Window.partitionBy("doc_id")))
     // Candidate generation, two regimes:
     //  - default: probe the FULL postings table — every shared capped
     //    shingle is a candidate edge (exact candidate recall; postings
@@ -760,24 +761,27 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
     //  - bandCandidates: probe the 16-rows-per-doc bands/ table first —
     //    old docs sharing >= 1 MinHash band key with the batch form the
     //    candidate set, and ONLY their postings enter the s-join. The
-    //    shuffle drops from (all postings matching batch shingles) to
-    //    (candidate docs' postings): at a daily-crawl corpus/batch
-    //    ratio that is the near-dup-rate fraction of the baseline.
-    //    Candidate recall follows the published 16x8 banding s-curve
-    //    (threshold >= 0.7 enforced); precision stays exact — every
-    //    candidate is verified with the true capped-shingle Jaccard.
-    // Broadcast posture: the batch's band keys are batch-bounded (16
-    // per doc) and the surviving candidate id set is NEAR-DUP-bounded
-    // (8 bytes per old doc with a colliding band) — both are explicit
-    // broadcasts so the corpus-side tables are SCANNED map-side, never
-    // re-shuffled; without the hints the candidate semi-join would
-    // shuffle the whole postings table by doc_id and give the saving
-    // back. A batch whose candidate set outgrows the broadcast budget
-    // is a batch that near-dups a huge corpus slice — split it.
+    //    postings scanned drop from (all postings matching batch
+    //    shingles) to (candidate docs' postings): at a daily-crawl
+    //    corpus/batch ratio that is the near-dup-rate fraction of the
+    //    baseline. Candidate recall follows the published 16x8 banding
+    //    s-curve (threshold >= 0.7 enforced); precision stays exact —
+    //    every candidate is verified with the true capped-shingle
+    //    Jaccard.
+    // Broadcast posture: the batch's band keys (16 per doc), the
+    // near-dup-bounded candidate ids, the candidate pairs (each capped
+    // shingle matches at most `cap` old docs) and the batch's
+    // fingerprints are batch-bounded explicit broadcasts, so those
+    // corpus-side tables are SCANNED map-side, never shuffled. The
+    // capped batch shingles are broadcast by the planner's own size
+    // rule: a batch too large for it shuffles the postings table in
+    // the default regime, the baseline the banded regime exists to
+    // beat. A batch that outgrows the broadcast budget is a batch
+    // that near-dups a huge corpus slice — split it.
     val oldSh =
       if (!bandCandidates) view.sh
       else {
-        val batchBands = Dedup.bandKeysAt(bCapped, view.banding)
+        val batchBands = Dedup.bandKeysAt(bCapped.select("doc_id", "s"), view.banding)
           .select(col("band"), col("bv"))
         val candOld = view.bands
           .join(broadcast(batchBands), Seq("band", "bv"), "left_semi")
@@ -786,23 +790,23 @@ class ShingleIndex(private[dedup] val spark: SparkSession, path: String,
       }
     val inter = bCapped.as("a")
       .join(oldSh.as("b"), col("a.s") === col("b.s"))
-      .groupBy(col("a.doc_id").as("id_new"), col("b.doc_id").as("id_old"))
+      .groupBy(col("a.doc_id").as("id_new"), col("a.na"), col("b.doc_id").as("id_old"))
       .agg(count(lit(1)).as("i"))
     val jac = col("i").cast(DoubleType) / (col("na") + col("nb") - col("i"))
-    val nearDup = inter
-      .join(bSizes.withColumnRenamed("doc_id", "id_new"), "id_new")
-      .join(view.sizes
-        .select(col("doc_id").as("id_old"), col("n").as("nb")), "id_old")
+    val near = broadcast(inter)
+      .join(view.sizes.select(col("doc_id").as("id_old"), col("n").as("nb")), "id_old")
       .filter(jac >= threshold)
-      .select(col("id_new").as("doc_id")).distinct().withColumn("__near", lit(1L))
-    val verdicts = bIds
-      .join(exactDup, Seq("doc_id"), "left")
-      .join(nearDup, Seq("doc_id"), "left")
+      .select(col("id_new").as("doc_id"), lit(0L).as("__exact"), lit(1L).as("__near"))
+    val exact = view.fps.join(broadcast(fpOf(batch)), "fp")
+      .select(col("doc_id"), lit(1L).as("__exact"), lit(0L).as("__near"))
+    val verdicts = batch.select(col("doc_id"), lit(0L).as("__exact"), lit(0L).as("__near"))
+      .union(exact).union(near)
+      .groupBy("doc_id").agg(max("__exact").as("__exact"), max("__near").as("__near"))
       .select(col("doc_id"),
-        when(col("__exact").isNotNull, "exact")
-          .when(col("__near").isNotNull, "near")
+        when(col("__exact") === 1L, "exact")
+          .when(col("__near") === 1L, "near")
           .otherwise("keep").as("verdict"))
-    (verdicts, Seq(bsh))
+    (verdicts, caches)
   }
 
   /** A per-stream resolved gate over this index — see [[ShingleProbe]]
@@ -967,9 +971,8 @@ object ShingleIndex {
     * resolved once per stream. `fps`/`sh`/`bands` are LIVE rows
     * (tombstones excluded); `sizes` may carry deleted docs' rows —
     * they are inert, reachable only through a live `sh` candidate.
-    * `dfTotals(keys)` returns (s, df) current-df rows and may restrict
-    * itself to `keys`' shingles (any superset is equivalent — the
-    * consumer joins them back against the batch's own shingles).
+    * `dfRows` are the raw (s, df) delta tables whose sum per shingle is
+    * its current df ([[capped]] sums them).
     */
   private[dedup] trait CorpusView {
     def banding: Int                         // bands/ table's banding
@@ -978,6 +981,63 @@ object ShingleIndex {
     def sh: DataFrame                        // (doc_id, s)
     def sizes: DataFrame                     // (doc_id, n)
     def bands: DataFrame                     // (doc_id, band, bv) — band regime only
-    def dfTotals(keys: DataFrame): DataFrame // (s, df)
+    def dfRows: Seq[DataFrame]               // (s, df) deltas
   }
+
+  /** What [[capped]] reads off a batch: its distinct doc count, whether
+    * any of its ids is tombstoned, its shingles over the df cap, and the
+    * number of its (doc_id, s) rows at or under the cap.
+    */
+  private[dedup] final case class Capped(nBatch: Long, clash: Boolean,
+                                         hot: Seq[String], nShingles: Long)
+
+  /** The batch scalars and the df rule of [[ShingleIndex.append]]'s
+    * insert-time cap and [[ShingleIndex.judge]]'s judge-time cap, in one
+    * aggregate over the batch's ids and its (doc_id, s) shingles `sh`.
+    * A shingle's df is the sum of the index's `dfRows` delta rows — each
+    * semi-joined to the batch's keys map-side, so the shuffle is
+    * batch-sized whatever the corpus size — plus the batch's own count.
+    * The cap is `capOf(distinct batch docs)`; `capOf` never falls as its
+    * argument grows, so only shingles over `capOf(0)` can be over it,
+    * and only those leave the aggregate. They are few by construction
+    * (each is in more than maxDfFraction of the documents, so they
+    * number fewer than the mean shingles per document over
+    * maxDfFraction), so they leave as a driver-side set: [[without]]
+    * filters them out map-side, keeping the batch's partitioning.
+    */
+  private[dedup] def capped(batch: DataFrame, sh: DataFrame, dfRows: Seq[DataFrame],
+                            tombs: Seq[Long])(capOf: Long => Long): Capped = {
+    val keys = broadcast(sh.select("s"))
+    val noId = lit(null).cast(LongType)
+    val index = dfRows.map(_.join(keys, Seq("s"), "left_semi")
+      .select(col("s"), noId.as("doc_id"), col("df"), lit(0L).as("own")))
+    val ids = batch.select(lit(null).cast(StringType).as("s"),
+      col("doc_id").cast(LongType).as("doc_id"), lit(0L).as("df"), lit(0L).as("own"))
+    val own = sh.select(col("s"), noId.as("doc_id"), lit(1L).as("df"), lit(1L).as("own"))
+    val clash = if (tombs.isEmpty) lit(false) else max(col("doc_id").isin(tombs: _*))
+    val r = (ids +: own +: index).reduce(_ union _)
+      .groupBy("s", "doc_id").agg(sum("df").as("df"), sum("own").as("own"))
+      .coalesce(1)
+      .agg(count(col("doc_id")), coalesce(clash, lit(false)),
+        collect_list(when(col("df") > capOf(0L), struct(col("s"), col("df"), col("own")))),
+        coalesce(sum("own"), lit(0L)))
+      .head()
+    val cap = capOf(r.getLong(0))
+    val hot = r.getSeq[org.apache.spark.sql.Row](2).filter(_.getLong(1) > cap)
+    Capped(r.getLong(0), r.getBoolean(1), hot.map(_.getString(0)),
+      r.getLong(3) - hot.map(_.getLong(2)).sum)
+  }
+
+  /** Caches a batch's shingles `sh` for its several uses, unless the
+    * batch is held in driver memory (a local relation): shingling it
+    * again at each use is map-only work with no Spark job, while a
+    * cache costs a job per plan that first scans it. Returns what was
+    * cached, for the caller to release.
+    */
+  private[dedup] def cacheUnlessLocal(batch: DataFrame, sh: DataFrame): Seq[DataFrame] =
+    if (batch.isLocal) Nil else Seq(sh.cache())
+
+  /** `sh` without the shingles `hot`. */
+  private[dedup] def without(sh: DataFrame, hot: Seq[String]): DataFrame =
+    if (hot.isEmpty) sh else sh.filter(!col("s").isin(hot: _*))
 }

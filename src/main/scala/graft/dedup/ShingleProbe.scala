@@ -15,8 +15,7 @@ import org.apache.spark.sql.functions._
   * call — each of the five tables re-lists its `batch=<label>`
   * directories and re-reads one parquet footer per batch per call, a
   * fixed cost that grows with ingested-batch count (the measured
-  * 2001-dir pathology that `compact()` exists for), and the df fold
-  * re-aggregates the whole dfc/ table per call. A probe instead:
+  * 2001-dir pathology that `compact()` exists for). A probe instead:
   *  - resolves each table's frame ONCE (Spark caches the file listing
   *    inside the frame, so every later tick re-scans data files only —
   *    no re-listing, no footer re-reads, no schema re-inference);
@@ -24,9 +23,10 @@ import org.apache.spark.sql.functions._
   *    back from the batch's own partition directories — exactly the
   *    rows [[ShingleIndex.append]] persisted, so probe state cannot
   *    drift from disk;
-  *  - computes per-tick df totals only for the batch's OWN shingle
-  *    keys: each leg is a map-side broadcast semi-join, then a
-  *    batch-bounded sum — never a corpus-wide re-aggregation.
+  *  - sums per-tick df totals only for the batch's OWN shingle keys
+  *    (the index's one df rule, `ShingleIndex.capped`): each leg
+  *    is a map-side broadcast semi-join, then a batch-bounded sum —
+  *    never a corpus-wide re-aggregation.
   *
   * Contract (on top of the index's single-writer model):
   *  - The only index mutations while a probe is live are
@@ -95,11 +95,7 @@ final class ShingleProbe private[dedup](idx: ShingleIndex,
       def sh: DataFrame = legs.map(_.sh).reduce(_ union _)
       def sizes: DataFrame = legs.map(_.sizes).reduce(_ union _)
       def bands: DataFrame = legs.map(_.bands.get).reduce(_ union _)
-      def dfTotals(keys: DataFrame): DataFrame = {
-        val k = broadcast(keys)
-        legs.map(_.df.join(k, Seq("s"), "left_semi")).reduce(_ union _)
-          .groupBy("s").agg(sum("df").as("df"))
-      }
+      def dfRows: Seq[DataFrame] = legs.map(_.df)
     }
     val (v, caches) = idx.judgeCore(view, batch, threshold, bandCandidates)
     val out = v.localCheckpoint(true)

@@ -267,11 +267,12 @@ class TermIndex(spark: SparkSession, path: String,
       // overstated; the retry recomputes both from the still-present
       // postings rows and heals
       BatchedTable.writeBatch(live.select("doc_id"), delDir, label)
-      val delta = live.agg(
-        (-count(lit(1))).as("n_docs"),
-        (-coalesce(sum("dl"), lit(0L))).as("sum_dl"))
-      BatchedTable.writeBatch(delta, metaDir, label)
-      live.count()
+      // the delta's two counts in one job over the checkpoint; the
+      // first is also the return value
+      val d = live.coalesce(1).agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).head()
+      BatchedTable.writeBatch(spark.range(0, 1, 1, 1).select(lit(-d.getLong(0)).as("n_docs"),
+        lit(-d.getLong(1)).as("sum_dl")), metaDir, label)
+      d.getLong(0)
     } finally org.apache.spark.sql.graftshim.CheckpointInterop.unpersistCheckpoint(live)
   }
 

@@ -594,34 +594,45 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
       // an id's new vector may route to a different shard than its old
       // copy: rewrite both the destination shards and the shards that
       // currently hold the ids (otherwise the old copy survives)
-      val touched = incoming.select("shard")
-        .union(current.join(incoming.select(col(idCol)), Seq(idCol), "left_semi").select("shard"))
-        .distinct().collect().map(_.getLong(0))
+      val touched = shardSet(incoming.select("shard")
+        .union(current.join(incoming.select(col(idCol)), Seq(idCol), "left_semi").select("shard")))
       val existing = current
         .filter(col("shard").isin(touched: _*))
         .join(incoming.select(col(idCol)), Seq(idCol), "left_anti")
       overwriteTouched(existing.unionByName(incoming), touched)
       touched
-    } finally incoming.unpersist()
+    } finally org.apache.spark.sql.graftshim.CheckpointInterop.unpersistCheckpoint(incoming)
+  }
+
+  /** The distinct values of the long column `shard`, in ascending
+    * order: each partition keeps its own distinct set, and the driver
+    * merges them — one job with no exchange.
+    */
+  private def shardSet(shards: DataFrame): Array[Long] = {
+    import spark.implicits._
+    shards.select(col("shard").cast(LongType)).as[Long]
+      .mapPartitions(_.toSet.iterator).collect().distinct.sorted
   }
 
   /** Overwrite the touched shard partitions with `result`. Dynamic
     * partition overwrite only rewrites partitions that receive rows, so
     * a touched shard with NO surviving rows would keep its stale
-    * directory — delete those explicitly.
+    * directory — delete those explicitly. Which ones they are is read
+    * off the write itself: every rewritten partition holds new files,
+    * so a touched shard whose file listing the write left unchanged
+    * received no rows.
     */
   private def overwriteTouched(result: DataFrame, touched: Array[Long]): Unit = {
-    val surviving = result.select("shard").distinct().collect()
-      .map(_.get(0).asInstanceOf[Number].longValue()).toSet
+    def shardDir(s: Long) = s"$vecDir/shard=$s"
+    val before = touched.map(s => s -> graft.Tables.listing(spark, shardDir(s))).toMap
     result.sortWithinPartitions(col("shard"), col(idCol))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("shard").parquet(vecDir)
     val fs = new org.apache.hadoop.fs.Path(vecDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    touched.filterNot(surviving).foreach { s =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$vecDir/shard=$s"), true)
-    }
+    touched.filter(s => before(s).nonEmpty && graft.Tables.listing(spark, shardDir(s)) == before(s))
+      .foreach(s => fs.delete(new org.apache.hadoop.fs.Path(shardDir(s)), true))
   }
 
   /** Delete by id (any scalar id type), rewriting only the shard
@@ -631,8 +642,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
   def delete(ids: Seq[Any]): Array[Long] = {
     val all = resolved(spark, vecDir)
       .withColumn("shard", col("shard").cast("long"))
-    val touched = all.filter(col(idCol).isin(ids: _*))
-      .select("shard").distinct().collect().map(_.getLong(0))
+    val touched = shardSet(all.filter(col(idCol).isin(ids: _*)).select("shard"))
     if (touched.isEmpty) return Array.empty
     overwriteTouched(
       all.filter(col("shard").isin(touched: _*) && !col(idCol).isin(ids: _*)), touched)

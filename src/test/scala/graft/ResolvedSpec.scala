@@ -2,10 +2,7 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,35 +18,10 @@ import graft.vector.VectorStore
 class ResolvedSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.local(4, "graft-test")
 
-  /** Spark jobs started while `f` runs. The listener bus delivers in
-    * order, so a marked sentinel job run before `f` drains earlier
-    * events, and one run after it closes the count.
-    */
+  /** Spark jobs started while `f` runs ([[JobCount.during]]). */
   private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger(0)
-    val marks = Map("before" -> new CountDownLatch(1), "after" -> new CountDownLatch(1))
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("graft.sentinel")))
-          .flatMap(marks.get) match {
-          case Some(latch) => latch.countDown()
-          case None => jobs.incrementAndGet()
-        }
-    }
-    def sentinel(mark: String): Unit = {
-      sc.setLocalProperty("graft.sentinel", mark)
-      try spark.range(1).collect() finally sc.setLocalProperty("graft.sentinel", null)
-      assert(marks(mark).await(30, TimeUnit.SECONDS), s"sentinel '$mark' never arrived")
-    }
-    sc.addSparkListener(l)
-    try {
-      sentinel("before")
-      jobs.set(0)
-      val r = f
-      sentinel("after")
-      (r, jobs.get())
-    } finally sc.removeSparkListener(l)
+    val (r, n) = JobCount.during(spark)(f)
+    (r, n.jobs)
   }
 
   private def corpus(from: Long, until: Long): DataFrame =

@@ -181,25 +181,6 @@ object Tables {
           }))
     }
 
-  /** Fan a scan across cores BEFORE heavy per-row work when the source
-    * layout cannot: the test parquet ships one row group per table, so
-    * the scan is a single input split and every narrow operator above
-    * it (explodes, per-doc scoring, decimal partial aggregation) runs
-    * on ONE core while the other 31 idle (guide §2.5: "input skew: one
-    * huge unsplittable file … otherwise repartition immediately after
-    * the read"). GATED on the actual scan parallelism vs the
-    * cluster's, so on a real multi-file corpus this is the identity —
-    * an unconditional repartition here would add a full-table shuffle
-    * exactly where the scan is already parallel, which is the wrong
-    * 100 TB plan for aggregation-shaped queries whose partial
-    * aggregates otherwise run before any exchange.
-    *
-    * Keyed repartition (hash on a high-cardinality column, no
-    * round-robin) keeps row placement deterministic without the local
-    * sort `repartition(n)` pays (SPARK-23207), and consumers keep the
-    * repo's order-independence conventions (integer/decimal sums,
-    * tie-broken windows), so results are partitioning-invariant.
-    */
   /** Per-task COMPRESSED-input target for the fan width (overridable
     * via spark.graft.fan.targetBytes / SPARK_GRAFT_FAN_TARGET_BYTES).
     * The fan sites all sit under explode-style amplification (trigram
@@ -219,20 +200,24 @@ object Tables {
       .orElse(sys.env.get("SPARK_GRAFT_FAN_TARGET_BYTES"))
       .map(_.toLong).getOrElse(64L * 1024)
 
-  private[graft] def fanned(df: DataFrame,
-                            key: org.apache.spark.sql.Column): DataFrame = {
-    val s = df.sparkSession
-    val p = s.sparkContext.defaultParallelism
-    // Scan-parallelism estimate from the FILE INDEX ONLY — deliberately
-    // not df.rdd.getNumPartitions: materializing the RDD plans the
-    // whole query AND fires a QueryExecutionListener event per call
-    // (Spark 4 emits "rdd" actions), which broke the pipeline
-    // accounting specs and costs a full planning pass. The estimate
-    // replicates FilePartition.maxSplitBytes' sizing (min(maxPartition,
-    // max(openCost, total/minPartitionNum))) over the relation's
-    // sizeInBytes — identical asymptotics: ~1 split for a small
-    // single-file table (fan), thousands at corpus scale (identity).
-    val conf = s.sessionState.conf
+  /** What `df` reads, from its plan alone (no RDD, no job): each file
+    * relation's (bytes, files) from its file index, or, for a plan
+    * that reads no relation at all (an in-memory batch, a checkpoint),
+    * its optimized-plan size estimate — exact for a local relation —
+    * with no files. Mixed file + non-file plans are sized from the file
+    * scans alone; a plan that reads only non-file relations (JDBC, a
+    * stream) is unknown: None. The one size estimate of the program:
+    * [[fanned]] widths a scan by it and the vector store's shard writer
+    * sizes its tasks by it.
+    */
+  private[graft] final case class Input(bytes: BigInt, files: Seq[(Long, Long)])
+
+  private[graft] def input(df: DataFrame): Option[Input] = {
+    // from the FILE INDEX ONLY — deliberately not
+    // df.rdd.getNumPartitions: materializing the RDD plans the whole
+    // query AND fires a QueryExecutionListener event per call (Spark 4
+    // emits "rdd" actions), which broke the pipeline accounting specs
+    // and costs a full planning pass
     val rels = df.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         l.relation match {
@@ -243,43 +228,70 @@ object Tables {
         }
     }
     val files = rels.flatten
-    if (rels.nonEmpty && files.isEmpty) return df // non-file relation
-    // (JDBC/stream source) and no file scan: unknown parallelism, don't
-    // second-guess it. Mixed file + non-file plans decide from the file
-    // scans alone (they are what the fan parallelizes); r15 summed a
-    // Long.MaxValue sentinel here, which OVERFLOWED on mixed plans and
-    // forced a full-table repartition at any scale.
+    // r15 summed a Long.MaxValue sentinel for the non-file scans of a
+    // mixed plan, which OVERFLOWED and forced a full-table repartition
+    // at any scale
+    if (rels.isEmpty) Some(Input(df.queryExecution.optimizedPlan.stats.sizeInBytes, Nil))
+    else if (files.isEmpty) None
+    else Some(Input(files.map(f => BigInt(f._1)).sum, files))
+  }
+
+  /** Fan a scan across cores BEFORE heavy per-row work when the source
+    * layout cannot: the test parquet ships one row group per table, so
+    * the scan is a single input split and every narrow operator above
+    * it (explodes, per-doc scoring, decimal partial aggregation) runs
+    * on ONE core while the other 31 idle (guide §2.5: "input skew: one
+    * huge unsplittable file … otherwise repartition immediately after
+    * the read"). GATED on the actual scan parallelism vs the
+    * cluster's, so on a real multi-file corpus this is the identity —
+    * an unconditional repartition here would add a full-table shuffle
+    * exactly where the scan is already parallel, which is the wrong
+    * 100 TB plan for aggregation-shaped queries whose partial
+    * aggregates otherwise run before any exchange.
+    *
+    * Keyed repartition (hash on a high-cardinality column, no
+    * round-robin) keeps row placement deterministic without the local
+    * sort `repartition(n)` pays (SPARK-23207), and consumers keep the
+    * repo's order-independence conventions (integer/decimal sums,
+    * tie-broken windows), so results are partitioning-invariant.
+    */
+  private[graft] def fanned(df: DataFrame,
+                            key: org.apache.spark.sql.Column): DataFrame = {
+    val s = df.sparkSession
+    val p = s.sparkContext.defaultParallelism
+    val conf = s.sessionState.conf
+    // unknown parallelism (a non-file relation and no file scan): don't
+    // second-guess it
+    val in = input(df).getOrElse(return df)
     // Byte-aware width (r16): size the fan from the input, not a flat
     // defaultParallelism — clamp(ceil(bytes / target), 1, p). A 600 KB
     // single-file table fans ~10 wide instead of 32 (the scheduling
     // overhead the 8-core inversions measured); a 10 MB one still
     // fans to p.
-    def width(bytes: BigInt): Int = {
-      val target = fanTargetBytes(s)
-      ((bytes + target - 1) / target).max(1).min(p).toInt
-    }
+    val target = fanTargetBytes(s)
+    val w = ((in.bytes + target - 1) / target).max(1).min(p).toInt
     // A PLAN WITH NO LogicalRelation AT ALL (an in-memory batch, a
     // checkpoint) always fans — never a 100 TB scan — at the width of
-    // its own size estimate: exact for a local relation, so a batch of
-    // a few dozen rows is coalesced into one partition with no shuffle,
-    // and everything keyed downstream of it needs no further exchange.
-    if (rels.isEmpty) {
-      val w = width(df.queryExecution.optimizedPlan.stats.sizeInBytes)
-      return if (w == 1) df.coalesce(1) else df.repartition(w, key)
-    }
-    // Estimated splits per relation: ceil((bytes + nFiles·openCost) /
-    // maxSplitBytes) — openCost charged per file exactly as
-    // FilePartition packs them (the r15 nFiles·32 cap UNDERcounted
-    // splits of large files: one 10 GB file is 80 real splits, so the
-    // cap would fan an already-parallel scan on a >32-core cluster).
-    val splits = files.map { case (bytes, nFiles) =>
+    // its own size estimate: a batch of a few dozen rows is coalesced
+    // into one partition with no shuffle, and everything keyed
+    // downstream of it needs no further exchange.
+    if (in.files.isEmpty) return if (w == 1) df.coalesce(1) else df.repartition(w, key)
+    // Scan-parallelism estimate: replicates FilePartition.maxSplitBytes'
+    // sizing (min(maxPartition, max(openCost, total/minPartitionNum)))
+    // per relation — ~1 split for a small single-file table (fan),
+    // thousands at corpus scale (identity). Estimated splits per
+    // relation: ceil((bytes + nFiles·openCost) / maxSplitBytes) —
+    // openCost charged per file exactly as FilePartition packs them
+    // (the r15 nFiles·32 cap UNDERcounted splits of large files: one
+    // 10 GB file is 80 real splits, so the cap would fan an
+    // already-parallel scan on a >32-core cluster).
+    val splits = in.files.map { case (bytes, nFiles) =>
       val maxSplit = math.max(conf.filesOpenCostInBytes,
         math.min(conf.filesMaxPartitionBytes, bytes / math.max(p, 1)))
       val charged = bytes + nFiles * conf.filesOpenCostInBytes
       math.max(1L, (charged + maxSplit - 1) / maxSplit)
     }.sum
     // a scan already at least `width` parallel is left alone entirely
-    val w = width(files.map(_._1).sum)
     if (splits < w) df.repartition(w, key) else df
   }
 

@@ -56,6 +56,9 @@ object HashEmbedder extends QueryModule {
   def embed(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val byDoc = Window.partitionBy(idCol)
     val sparse = docs
+      .transform(Tables.fanned(_, col(idCol))) // as in components(): a
+      // small batch is one partition, so neither aggregate nor the
+      // window below needs an exchange
       .select(col(idCol), explode(split(col(textCol), " ")).as("w"))
       .withColumn("h", wordHash(col("w")))
       .withColumn("dim", (col("h") % Dim).cast("int"))

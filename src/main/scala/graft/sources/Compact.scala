@@ -6,11 +6,12 @@ import org.apache.spark.sql.functions.col
 
 /** Small-file compaction for parquet directories — the housekeeping
   * job any long-lived ingest needs: micro-batch appends
-  * ([[graft.vector.VectorStore.streamStore]]) and upsert churn leave
-  * a long tail of KB-scale files whose per-file open/footer/stat cost
-  * eventually dominates scans. Compaction rewrites a directory into
-  * ~`targetBytes` files with a shuffle-free `coalesce` (file count is
-  * a SIZE concern, not a semantic one — no keys, no sort unless asked).
+  * ([[graft.vector.VectorStore.streamStore]]) leave a long tail of
+  * KB-scale files, one per batch per shard, whose per-file
+  * open/footer/stat cost eventually dominates scans. Compaction
+  * rewrites a directory into ~`targetBytes` files with a shuffle-free
+  * `coalesce` (file count is a SIZE concern, not a semantic one — no
+  * keys, no sort unless asked).
   *
   * Consistency contract: SINGLE WRITER, not crash-atomic. The swap is
   * write-to-sibling-`_<name>__compact_tmp` -> delete `<dir>` -> rename

@@ -212,13 +212,12 @@ class TermIndex(spark: SparkSession, path: String,
     // REPLAY of an append can never trip this: appends never write del/)
     require(!fs.exists(new Path(s"$delDir/batch=$label")),
       s"label '$label' was used by a delete — labels are unique across mutations")
+    // isEmpty is a limit(1) collect: an in-memory batch's filter and
+    // limit fold into its local relation, so the check runs no job
     val tombs = tombstones(None)
-    if (tombs.nonEmpty) {
-      val clash = batch.filter(col("doc_id").isin(tombs: _*)).limit(1).count()
-      require(clash == 0,
-        "append: batch contains tombstoned doc_ids — run reclaim(<delete label>) " +
-          "(or a full compact()) before re-ingesting a deleted id")
-    }
+    require(tombs.isEmpty || batch.filter(col("doc_id").isin(tombs: _*)).isEmpty,
+      "append: batch contains tombstoned doc_ids — run reclaim(<delete label>) " +
+        "(or a full compact()) before re-ingesting a deleted id")
     writeBatchOf(batch, label)
   }
 

@@ -140,11 +140,37 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
       deleteDir(opqDir)
       assigned
     }
-    // id-sorted within each task so every parquet row group covers a
-    // disjoint id range: point lookups and shortlist re-rank filters
-    // prune on row-group stats instead of scanning whole shards
-    out.sortWithinPartitions(col("shard"), col(idCol))
-      .write.mode(SaveMode.Overwrite).partitionBy("shard").parquet(vecDir)
+    writeShards(out, SaveMode.Overwrite)
+  }
+
+  /** The one shard write of the store: `df`'s rows into the `shard=`
+    * partitions of `dir`, each task's rows sorted by (shard, id).
+    *
+    * The write runs in no more tasks than its bytes need: a
+    * shuffle-free coalesce to ⌈estimated bytes /
+    * spark.sql.files.maxPartitionBytes⌉, the estimate being
+    * [[graft.Tables.input]]'s (a coalesce never raises a task count,
+    * and an unknown size leaves the partitioning as it is). So a store
+    * or rewrite under one split goes through one task and leaves
+    * exactly one file per shard, whatever frame reached the writer,
+    * and that file's row groups cover disjoint id ranges: point
+    * lookups and shortlist re-rank filters prune on row-group stats,
+    * and a `get` opens one footer per shard. A larger write keeps one
+    * task per split, each writing its own id-sorted file per shard.
+    * No repartition by shard: that shuffle would add a job to every
+    * upsert and delete.
+    *
+    * An overwrite replaces all of `dir` unless `dynamic`, which
+    * replaces only the shards that receive rows.
+    */
+  private def writeShards(df: DataFrame, mode: SaveMode, dir: String = vecDir,
+                          dynamic: Boolean = false): Unit = {
+    val split = spark.sessionState.conf.filesMaxPartitionBytes
+    graft.Tables.input(df)
+      .fold(df)(in => df.coalesce(((in.bytes + split - 1) / split).max(1).min(Int.MaxValue).toInt))
+      .sortWithinPartitions(col("shard"), col(idCol))
+      .write.mode(mode).option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
+      .partitionBy("shard").parquet(dir)
   }
 
   private val ResidualCol = "__residual"
@@ -500,10 +526,8 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
       .select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))
       .withColumn("shard", Centroids.nearestShard(col(vecCol), cents))
     // a PQ-built store keeps its compressed shape through ingest
-    pqMeta().map(pm => withCodes(routed, pm.books, pm.residual, pm.rotation))
-      .getOrElse(routed)
-      .sortWithinPartitions(col("shard"), col(idCol))
-      .write.mode(SaveMode.Append).partitionBy("shard").parquet(vecDir)
+    writeShards(pqMeta().map(pm => withCodes(routed, pm.books, pm.residual, pm.rotation))
+      .getOrElse(routed), SaveMode.Append)
   }
 
   /** Point lookup (reference /get/{id} scans every shard; here the id
@@ -625,10 +649,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
   private def overwriteTouched(result: DataFrame, touched: Array[Long]): Unit = {
     def shardDir(s: Long) = s"$vecDir/shard=$s"
     val before = touched.map(s => s -> graft.Tables.listing(spark, shardDir(s))).toMap
-    result.sortWithinPartitions(col("shard"), col(idCol))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("shard").parquet(vecDir)
+    writeShards(result, SaveMode.Overwrite, dynamic = true)
     val fs = new org.apache.hadoop.fs.Path(vecDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     touched.filter(s => before(s).nonEmpty && graft.Tables.listing(spark, shardDir(s)) == before(s))
@@ -694,8 +715,7 @@ final class VectorStore(spark: SparkSession, path: String, numShards: Int = 4,
       val fs = vecPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val tmp = new org.apache.hadoop.fs.Path(
         vecPath.getParent, "_" + vecPath.getName + "__refresh_tmp")
-      out.sortWithinPartitions(col("shard"), col(idCol))
-        .write.mode(SaveMode.Overwrite).partitionBy("shard").parquet(tmp.toString)
+      writeShards(out, SaveMode.Overwrite, tmp.toString)
       val touched = fs.listStatus(tmp).map(_.getPath.getName)
         .filter(_.startsWith("shard=")).map(_.stripPrefix("shard=").toLong).sorted
       if (!fs.delete(vecPath, true))

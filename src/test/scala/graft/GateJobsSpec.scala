@@ -37,8 +37,8 @@ class GateJobsSpec extends AnyFunSuite {
   private val Pins = Map(
     "judge" -> 12, "judge (warm)" -> 10,
     "shingle append" -> 9, "shingle append (replay)" -> 10,
-    "term append" -> 7, "term append (replay)" -> 6,
-    "upsert" -> 8, "upsert (replay)" -> 7,
+    "term append" -> 6, "term append (replay)" -> 5,
+    "upsert" -> 6, "upsert (replay)" -> 5,
     "vector delete" -> 2, "vector delete (replay)" -> 1,
     "term delete" -> 5, "term delete (replay)" -> 6,
     "shingle delete" -> 8, "shingle delete (replay)" -> 9)

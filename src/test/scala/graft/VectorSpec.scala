@@ -727,14 +727,15 @@ class VectorSpec extends AnyFunSuite {
     // collapses to id%7 — only 7 distinct jitter patterns, so a point's
     // exact twins (its whole true-neighbor set) share its shard and the
     // split never shows in recall
-    def clustered(center: Int => org.apache.spark.sql.Column) =
-      spark.range(0, 2000, 1, 8).select(col("id"),
+    def clustered(center: Int => org.apache.spark.sql.Column, from: Long = 0L,
+                  until: Long = 2000L) =
+      spark.range(from, until, 1, 8).select(col("id"),
         array((0 until 64).map { d =>
           center(d) +
             (pmod(hash(col("id"), lit(d)), lit(101)).cast("double") - 50.0) * 0.003
         }: _*).as("vector"))
-    val original = clustered(d =>
-      when(pmod(col("id"), lit(4)) === d / 16, 5.0).otherwise(0.0))
+    def home(d: Int) = when(pmod(col("id"), lit(4)) === d / 16, 5.0).otherwise(0.0)
+    val original = clustered(home)
     val dir = Files.createTempDirectory("graft-maint").toString
     val vs = new VectorStore(spark, dir, numShards = 4)
     vs.build(original, iters = 3)
@@ -747,6 +748,12 @@ class VectorSpec extends AnyFunSuite {
       if (d / 16 == 1 || d / 16 == 2) lit(2.5) else lit(0.0))
       .filter(pmod(col("id"), lit(4)) === 1)
     vs.upsert(drifted)
+    // ingest churn for the compaction below: three micro-batch appends
+    // of fresh cluster-3 vectors, each one more small file in that
+    // cluster's shard (an upsert rewrites each shard it touches as one
+    // file, so it leaves nothing to compact)
+    (0 until 3).foreach(b => vs.store(clustered(home, 2000L + 40 * b, 2040L + 40 * b)
+      .filter(pmod(col("id"), lit(4)) === 3)))
 
     val q = drifted.filter(col("id") === 1)
       .select(col("vector").cast("array<double>")).head().getSeq[Double](0)
@@ -769,7 +776,7 @@ class VectorSpec extends AnyFunSuite {
     // one maintenance pass: warm-started refresh consolidates the
     // drifted cluster into one shard (its old centroid, emptied of
     // original mass, converges onto the midpoint cluster) and the
-    // upsert-era small files compact back to one per shard
+    // appended small files compact back to one per shard
     val m = vs.maintain(sampleFraction = 1.0, iters = 3, targetFileBytes = 1L << 30)
     val after = recall1
     assert(after >= 9, s"refresh should consolidate the drifted cluster: $after/10")
